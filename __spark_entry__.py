@@ -1077,12 +1077,13 @@ def knn_ivf_index(spark, sf_dir):
     index is built once, written bucketed by cid, and amortized across
     queries — bench.py calls this OUTSIDE the timed region and reports
     the build cost separately."""
+    from feldman_spark.ops.sizing import persist_scoped
     from feldman_spark.pipeline.similarity import ivf_build
 
     e = _t(spark, sf_dir, "embeddings")
     assigned, cents = ivf_build(
         e.filter(F.col("vec_id") != 0), num_centroids=8, iters=2)
-    assigned = assigned.persist()
+    assigned = persist_scoped(assigned)
     assigned.count()
     return assigned, cents
 
@@ -4043,17 +4044,16 @@ def text_bpe_encode(spark, sf_dir):
     bpe_pair_counts trick); encoding a 100 TB corpus with the learned
     merges is one codegen pass
     (feldman_spark/pipeline/text.py::bpe_train_merges/bpe_apply_merges)."""
+    from feldman_spark.ops.sizing import persist_scoped
     from feldman_spark.pipeline.text import (
         _bpe_vocab, bpe_apply_merges, bpe_train_merges)
 
     d = _t(spark, sf_dir, "documents").select("text")
     # ONE corpus collapse shared by training and the top-20 output: the
     # persisted vocabulary feeds all 6 merge iterations AND the final
-    # TakeOrdered (registered with the lm-cache registry; the former
-    # shape rebuilt the word aggregate from the raw corpus twice)
-    from feldman_spark.pipeline.text import _LM_CACHES
-    vocab = _bpe_vocab(d, "text").persist()
-    _LM_CACHES.append(vocab)
+    # TakeOrdered (through persist_scoped; the former shape rebuilt the
+    # word aggregate from the raw corpus twice)
+    vocab = persist_scoped(_bpe_vocab(d, "text"))
     merges = bpe_train_merges(d, "text", n_merges=6, vocab=vocab)
     top = (
         vocab.orderBy(F.col("_n").desc(), F.col("w").asc()).limit(20)

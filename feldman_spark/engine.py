@@ -13,7 +13,7 @@ from typing import Optional, Tuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .export import ROW_ID, SpliceExport, splice_export
+from .export import SpliceExport, splice_export
 from .formats.registry import (
     AFFINE_FORMAT,
     MANUAL_CORRELATION_FORMAT,
@@ -25,6 +25,7 @@ from .formats.registry import (
 )
 from .io.csv import FormatError, can_create_with_file, read_tabular, write_csv
 from .ops.filters import valid_section_column
+from .ops.sizing import persist_scoped
 from .splice import (
     IDX,
     core_top_lookup,
@@ -76,11 +77,9 @@ def load_sit(spark: SparkSession, path: str) -> DataFrame:
 def load_measurement(spark: SparkSession, path: str, depth_column: str) -> DataFrame:
     """Measurement data: section identity columns canonicalized, all other
     columns untouched (``doc/manual.markdown:200-201``), user-chosen depth
-    column cast to double, plus a unique row id for the off-splice
-    anti-join. The big table: stays fully distributed."""
+    column cast to double. The big table: stays fully distributed."""
     df = read_tabular(spark, path, MEASUREMENT_FORMAT)
-    df = df.withColumn(depth_column, F.col(f"`{depth_column}`").cast("double"))
-    return df.withColumn(ROW_ID, F.monotonically_increasing_id())
+    return df.withColumn(depth_column, F.col(f"`{depth_column}`").cast("double"))
 
 
 def load_manual_correlation(
@@ -130,12 +129,12 @@ def convert_sparse_splice_frames(
 
     lookup = section_lookup(secsumm)
     enriched = with_offset_depths(sparse, lookup)
-    scanned = splice_scan(
+    scanned = persist_scoped(splice_scan(
         enriched,
         use_scaled_depths=use_scaled_depths,
         lazy_append=lazy_append,
         splice_start_depth=splice_start_depth,
-    ).cache()
+    ))
 
     sit = sit_from_scan(scanned, [c for c in sparse.columns]) \
         .withColumn(IDX, F.monotonically_increasing_id())
@@ -155,7 +154,8 @@ def convert_sparse_splice_frames(
     # off-splice crossJoin/window chain — is ~30 stages; cache it so every
     # downstream action (counts, broadcast into E2, CSV write) runs the
     # chain once instead of per-action
-    affine = fill_affine(on_aff.drop(IDX).unionByName(off_aff.drop(IDX))).cache()
+    affine = persist_scoped(
+        fill_affine(on_aff.drop(IDX).unionByName(off_aff.drop(IDX))))
     return affine, sit.drop(IDX)
 
 

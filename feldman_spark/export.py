@@ -34,10 +34,7 @@ from pyspark.sql import functions as F
 from .formats.columns import find_all_starts_with
 from .ops.windows import section_range
 
-__all__ = ["SpliceExport", "ROW_ID", "export_columns", "splice_export"]
-
-# retained for loader compatibility; the export itself no longer needs it
-ROW_ID = "_row_id"
+__all__ = ["SpliceExport", "export_columns", "splice_export"]
 
 
 @dataclass
@@ -53,10 +50,10 @@ def export_columns(md_columns: List[str]) -> List[str]:
     ``Splice Depth``, ``Offset``, ``On-Splice`` inserted after the last
     column whose name starts with "Sediment Depth" (las-normalized), or at
     the front if none (``feldman.py:385-393``, P4)."""
-    cols = [c for c in md_columns if c != ROW_ID]
-    matches = find_all_starts_with("Sediment Depth", cols)
-    idx = max(cols.index(m) for m in matches) + 1 if matches else 0
-    return cols[:idx] + ["Splice Depth", "Offset", "On-Splice"] + cols[idx:]
+    matches = find_all_starts_with("Sediment Depth", md_columns)
+    idx = max(md_columns.index(m) for m in matches) + 1 if matches else 0
+    return (md_columns[:idx] + ["Splice Depth", "Offset", "On-Splice"]
+            + md_columns[idx:])
 
 
 def _expand_sit_sections(sit: DataFrame) -> DataFrame:
@@ -84,17 +81,10 @@ def splice_export(
     depth_column: str,
     include_off_splice: bool = True,
     whole_splice_section: bool = False,
-    broadcast_splice_tables: bool = True,
 ) -> SpliceExport:
     """Export measurement rows with composite depth and on-/off-splice flag.
     One broadcast left join per stage; the measurement side never shuffles.
-
-    ``broadcast_splice_tables=False`` drops the broadcast hints for the
-    pathological case of a SIT/affine too large to broadcast (millions of
-    intervals) — Spark then shuffles both sides on the equi keys instead.
-    Real splice tables are hundreds of rows; keep the default.
     """
-    _maybe_broadcast = F.broadcast if broadcast_splice_tables else (lambda df: df)
     depth = F.col(f"`{depth_column}`")
     out_cols = export_columns(md.columns)
     sit_exp = _expand_sit_sections(sit)
@@ -116,12 +106,12 @@ def splice_export(
         }).select([F.col(f"`{c}`") for c in out_cols])
 
     if not include_off_splice:
-        joined = md.join(_maybe_broadcast(sit_exp), cond, "inner")
+        joined = md.join(F.broadcast(sit_exp), cond, "inner")
         return SpliceExport(
             spliced=finalize(joined, F.col("__offset"), F.lit("splice")),
             unwritten=None)
 
-    joined = md.join(_maybe_broadcast(sit_exp), cond, "left")
+    joined = md.join(F.broadcast(sit_exp), cond, "left")
 
     # The left join emits one row per interval match, and exactly one
     # null-extended row per measurement row matching no interval. The
@@ -137,7 +127,7 @@ def splice_export(
         & (F.col("Hole") == F.col("__ahole"))
         & (F.col("Core") == F.col("__acore"))
     )
-    joined = joined.join(_maybe_broadcast(aff), acond, "left")
+    joined = joined.join(F.broadcast(aff), acond, "left")
 
     is_on = F.col("__offset").isNotNull()
     is_off = F.col("__offset").isNull() & F.col("__aoffset").isNotNull()
@@ -147,5 +137,5 @@ def splice_export(
         F.when(is_on, F.lit("splice")).otherwise(F.lit("off-splice")),
     )
     unwritten = joined.filter(F.col("__offset").isNull() & F.col("__aoffset").isNull()) \
-        .select([F.col(f"`{c}`") for c in md.columns if c != ROW_ID])
+        .select([F.col(f"`{c}`") for c in md.columns])
     return SpliceExport(spliced=spliced, unwritten=unwritten)

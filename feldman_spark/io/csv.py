@@ -23,6 +23,7 @@ probe and encoding sniff touch the driver.
 
 from __future__ import annotations
 
+import codecs
 import csv as _csv
 import io as _io
 import os
@@ -59,27 +60,36 @@ class FormatError(Exception):
     """Input does not satisfy a tabular format (``tabular/csvio.py:15``)."""
 
 
+def _decode_probe(path: str, encoding: str, probe_bytes: int = 1 << 20) -> str:
+    """The first ``probe_bytes`` of ``path``, decoded. Incremental, so a
+    multi-byte character cut by the probe boundary is held back instead
+    of failing the decode; a file shorter than the probe must decode whole."""
+    with open(path, "rb") as f:
+        data = f.read(probe_bytes)
+    decoder = codecs.getincrementaldecoder(encoding)()
+    return decoder.decode(data, final=len(data) < probe_bytes)
+
+
 def _sniff_encoding(path: str, probe_bytes: int = 1 << 20) -> str:
     """UTF-8 first, Latin-1 fallback — mirrors the reference's two-attempt
     read (``tabular/pandasutils.py:19-36``). Driver-side peek of the first
     ~1 MB only; Latin-1 decodes any byte sequence, so it is a safe retry."""
     try:
-        with open(path, "rb") as f:
-            f.read(probe_bytes).decode("utf-8")
+        _decode_probe(path, "utf-8", probe_bytes)
         return "UTF-8"
     except (UnicodeDecodeError, OSError):
         return "ISO-8859-1"
 
 
 def read_headers(path: str) -> List[str]:
-    """Header-only probe without a full scan (``tabular/pandasutils.py:41-46``)."""
+    """Header-only probe without a full scan (``tabular/pandasutils.py:41-46``).
+    An empty file has no headers."""
     enc = _sniff_encoding(path)
-    with open(path, "rb") as f:
-        raw = f.read(1 << 20).decode("utf-8-sig" if enc == "UTF-8" else "latin-1")
+    raw = _decode_probe(path, "utf-8-sig" if enc == "UTF-8" else "latin-1")
     # universal newlines: files in the wild use \n, \r\n, or bare \r
     first = raw.splitlines()[0] if raw else ""
     reader = _csv.reader(_io.StringIO(first), skipinitialspace=True)
-    return [h.strip() for h in next(reader)]
+    return [h.strip() for h in next(reader, [])]
 
 
 def read_csv(spark: SparkSession, path: str, sep: str = ",") -> DataFrame:
@@ -205,16 +215,12 @@ def write_csv(
     fmt: Optional[TabularFormat] = None,
     org: str = "IODP",
     round_digits: Optional[int] = 3,
-    single_file: bool = True,
 ) -> None:
     """S6: CSV sink. Applies the export conventions of ``feldman.py:533-544``:
     numeric format columns rounded to 3 places (P8), canonical names renamed
     to the organization vocabulary (P3), helper Site/Hole dropped when a
-    compound SiteHole column is present.
-
-    ``single_file=True`` coalesces to one partition and moves the part file
-    to ``path`` so the output is one real CSV file (reference-parity small
-    outputs); at scale pass ``False`` to write a parallel CSV directory.
+    compound SiteHole column is present. Coalesces to one partition and
+    moves the part file to ``path``, so the output is one real CSV file.
     """
     df = _drop_site_hole(df)
     if fmt is not None:
@@ -223,9 +229,6 @@ def write_csv(
             # pandas .round() is HALF_EVEN (feldman.py:538-544) -> bround
             df = df.withColumns({c: F.bround(F.col(f"`{c}`"), round_digits) for c in num_cols})
         df = df.withColumnsRenamed(pretty_rename_map(fmt, df.columns, org))
-    if not single_file:
-        df.write.option("header", True).mode("overwrite").csv(path)
-        return
     import glob
     import shutil
 

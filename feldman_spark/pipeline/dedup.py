@@ -23,6 +23,8 @@ from typing import List, Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from feldman_spark.ops.sizing import persist_scoped, plan_size_estimate
+
 __all__ = [
     "exact_dedup",
     "word_shingles",
@@ -49,32 +51,9 @@ __all__ = [
     "corpus_overlap",
     "corpus_near_overlap",
     "containment_pairs",
-    "unpersist_dedup_caches",
 ]
 
 HEX_HIGH = "89abcdef"  # hex digits whose high bit is set
-
-# persisted candidate tables registered by operators whose RETURNED plan
-# is lazy (the cache must outlive the call so the caller's action can
-# reuse it) — released by unpersist_dedup_caches, the scoped-lifecycle
-# handle for long-lived sessions; bench/sweep harnesses clearCache()
-# between queries, which also works. Mirrors text._LM_CACHES.
-_DEDUP_CACHES: List[DataFrame] = []
-
-
-def unpersist_dedup_caches(blocking: bool = False) -> int:
-    """Release every candidate table this module persisted in-process
-    (:func:`corpus_near_overlap` registers its band-collision pair
-    cache here). Returns the number of tables released. Safe any time:
-    plans built on the tables stay valid and recompute lineage on next
-    use."""
-    n = 0
-    while _DEDUP_CACHES:
-        df = _DEDUP_CACHES.pop()
-        df.unpersist(blocking=blocking)
-        n += 1
-    return n
-
 
 def _widen_narrow_scan(df: DataFrame) -> DataFrame:
     """Repartition ``df`` to core count when it reads from FEWER FILES
@@ -196,10 +175,10 @@ def _relational_jaccard(
     # times (sizes + both pair sides) — without persistence the whole
     # candidate-GENERATION subplan upstream of `cand` re-executes per
     # consumer (measured 5x wall on the prefix-filter path)
-    cand = cand.persist()
+    cand = persist_scoped(cand)
     cd = (cand.select(F.col("doc1").alias(id_col))
           .union(cand.select("doc2")).distinct())
-    g_c = grams.join(cd, id_col).distinct().persist()
+    g_c = persist_scoped(grams.join(cd, id_col).distinct())
     sizes = g_c.groupBy(id_col).count()
     g1 = g_c.select(F.col(id_col).alias("doc1"), "_g")
     g2 = g_c.select(F.col(id_col).alias("doc2"), "_g")
@@ -364,7 +343,7 @@ def minhash_lsh_pairs(
     ex = _shingle_stream(df, text_col, id_col, k,
                          hashed=(hash_fn == "xxhash64"))
     stacked = _band_stack(ex, id_col, num_hashes, rows_per_band, hash_fn)
-    stacked = stacked.persist()  # both sides of the self-join; slim rows
+    stacked = persist_scoped(stacked)  # both sides of the self-join; slim rows
 
     left = stacked.select(F.col(id_col).alias("doc1"), "band", "bh")
     right = stacked.select(F.col(id_col).alias("doc2"), "band", "bh")
@@ -605,7 +584,7 @@ def ngram_jaccard_pairs(
     # ABOVE its true integer value would ceil one higher and shorten the
     # prefix — a silent recall hole; the epsilon can only LENGTHEN a
     # prefix (more candidates, never fewer)
-    ranked = (
+    ranked = persist_scoped(
         exd
         .groupBy(F.col(id_col), *grp)
         .agg(F.array_sort(F.collect_list(F.struct("_df", "_g"))).alias("_ord"))
@@ -622,7 +601,6 @@ def ngram_jaccard_pairs(
              + 1).cast("int"),
         )
         .withColumn("_pref", F.slice(F.col("_ord"), F.lit(1), F.col("_plen")))
-        .persist()
     )
     # positions ride along 0-based: sz − p is then exactly "the shared
     # gram plus everything after it" in that doc's sorted gram array
@@ -1242,12 +1220,10 @@ def embedding_cosine_pairs_lsh(
     # sign longs — never the vectors): BOTH self-join sides consume
     # them, and without the barrier each side re-runs the bucketize
     # matmul over the whole corpus (r10: the plan showed two full
-    # ArrowEval passes; registered with unpersist_dedup_caches)
-    stacked = base.mapInPandas(
+    # ArrowEval passes; released by ops.sizing.release)
+    stacked = persist_scoped(base.mapInPandas(
         bucketize,
-        schema=f"`{id_col}` {id_type}, tbl int, sig long{sig_schema}"
-    ).persist()
-    _DEDUP_CACHES.append(stacked)
+        schema=f"`{id_col}` {id_type}, tbl int, sig long{sig_schema}"))
 
     left = stacked.select(
         F.col(id_col).alias("id1"), "tbl", "sig",
@@ -1536,13 +1512,12 @@ def semantic_dedup(
     import numpy as np
     import pandas as pd
 
-    from feldman_spark.ops.sizing import plan_size_estimate
     from feldman_spark.pipeline.similarity import ivf_build
 
     # the build reads the input three times (seed-KMV collect, the
     # iteration passes' materialization, the final assignment), so
     # mid-sized inputs persist ONCE and serve all three from the
-    # column-pruned cache (registered with unpersist_dedup_caches;
+    # column-pruned cache (released by ops.sizing.release;
     # measured: sf1 median 4.29 -> 3.69 s, sf5 4.78 -> 4.27 s,
     # identical output). Tiny inputs skip the persist overhead (the
     # scans are already sub-second) and HUGE inputs keep the
@@ -1550,8 +1525,7 @@ def semantic_dedup(
     # the embeddings and the structural design is scan-per-pass.
     est = plan_size_estimate(df)
     if (1 << 20) < est <= (8 << 30):
-        df = df.persist()
-        _DEDUP_CACHES.append(df)
+        df = persist_scoped(df)
 
     assigned, _cents = ivf_build(
         df, vec_col=vec_col, id_col=id_col,
@@ -1694,8 +1668,8 @@ def minhash_dedup_incremental(
     # form ran the shingle+signature pipeline three times, ~2× wall)
     ex = _shingle_stream(_widen_narrow_scan(new_df), text_col, id_col, k,
                          hashed=(hash_fn == "xxhash64"))
-    bands_all = _band_stack(ex, id_col, num_hashes, rows_per_band,
-                            hash_fn).persist()
+    bands_all = persist_scoped(_band_stack(ex, id_col, num_hashes,
+                                           rows_per_band, hash_fn))
 
     left = bands_all.select(F.col(id_col).alias("doc1"), "band", "bh")
     right = bands_all.select(F.col(id_col).alias("doc2"), "band", "bh")
@@ -1836,24 +1810,21 @@ def corpus_near_overlap(
     # the side filters below the aggregate and splits the single band
     # pass back into one pass per side (~40 B/doc·band — the same
     # footprint the incremental band STORE persists by design)
-    bands = _band_stack(_shingle_stream(u, "_txt", "_id", k, carry=["_s"]),
-                        ["_s", "_id"], num_hashes, rows_per_band,
-                        "md5").persist()
-    _DEDUP_CACHES.append(bands)
-    cand = (
+    bands = persist_scoped(_band_stack(
+        _shingle_stream(u, "_txt", "_id", k, carry=["_s"]),
+        ["_s", "_id"], num_hashes, rows_per_band, "md5"))
+    cand = persist_scoped(
         bands.filter(F.col("_s") == "a")
         .select(F.col("_id").alias("_ida"), "band", "bh")
         .join(bands.filter(F.col("_s") == "b")
               .select(F.col("_id").alias("_idb"), "band", "bh"),
               ["band", "bh"])
-        .select("_ida", "_idb").distinct().persist()
+        .select("_ida", "_idb").distinct()
     )
     # candidate-pair cache consumed by the id restriction and the
     # co-count join; it outlives this call because the returned
-    # one-row plan is lazy — registered for unpersist_dedup_caches()
-    # exactly like lm_score's gram tables (long-lived sessions release
-    # it there; the bench/sweep harnesses clearCache() between queries)
-    _DEDUP_CACHES.append(cand)
+    # one-row plan is lazy — ops.sizing.release() frees it (the
+    # bench/sweep harnesses clearCache() between queries)
     # restrict to candidate docs BEFORE distinct (the _relational_jaccard
     # shape): the id restriction is a broadcast join, so the distinct's
     # shuffle carries candidate-doc grams only. In the production
@@ -1866,9 +1837,8 @@ def corpus_near_overlap(
            .distinct())
     # candidate-restricted distinct grams, persisted for the same
     # reason (three consumers; side filters would re-split the pass)
-    gu = (_shingle_stream(u, "_txt", "_id", k, carry=["_s"])
-          .join(ids, ["_s", "_id"]).distinct().persist())
-    _DEDUP_CACHES.append(gu)
+    gu = persist_scoped(_shingle_stream(u, "_txt", "_id", k, carry=["_s"])
+                        .join(ids, ["_s", "_id"]).distinct())
     sizes = gu.groupBy("_s", "_id").agg(F.count("*").alias("_sz"))
     ga = gu.filter(F.col("_s") == "a").select(
         F.col("_id").alias("_ida"), "_g")

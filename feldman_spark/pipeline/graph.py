@@ -29,30 +29,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from feldman_spark.ops.sizing import persist_scoped, plan_size_estimate
+
 __all__ = ["connected_components", "dedup_survivors",
            "dedup_survivors_best", "pagerank", "triangle_stats",
-           "cooccurrence_pairs", "cooccurrence_pmi",
-           "unpersist_graph_caches"]
-
-# persisted tables registered by operators whose RETURNED plan is lazy
-# (the cache must outlive the call so the caller's action can reuse it)
-# — released by unpersist_graph_caches, the scoped-lifecycle handle for
-# long-lived sessions; bench/sweep harnesses clearCache() between
-# queries, which also works. Mirrors dedup._DEDUP_CACHES.
-_GRAPH_CACHES: list = []
-
-
-def unpersist_graph_caches(blocking: bool = False) -> int:
-    """Release every table this module persisted in-process
-    (:func:`cooccurrence_pmi` registers its capped item-set table
-    here). Returns the number of tables released. Safe any time: plans
-    built on the tables stay valid and recompute lineage on next use."""
-    n = 0
-    while _GRAPH_CACHES:
-        df = _GRAPH_CACHES.pop()
-        df.unpersist(blocking=blocking)
-        n += 1
-    return n
+           "cooccurrence_pairs", "cooccurrence_pmi"]
 
 
 def connected_components(
@@ -437,9 +418,9 @@ def cooccurrence_pmi(
 
     Large inputs persist the capped item-set table in-process so all
     four consumers share one computation; in a long-lived session call
-    :func:`unpersist_graph_caches` when done (each call on a large
-    input pins another table until released — ``clearCache()`` between
-    queries, as the bench harness does, also works).
+    :func:`feldman_spark.ops.sizing.release` when done (each call on a
+    large input pins another table until released — ``clearCache()``
+    between queries, as the bench harness does, also works).
     """
     from feldman_spark.pipeline.sampling import cap_per_group
 
@@ -456,9 +437,9 @@ def cooccurrence_pmi(
     # distinct exchange + cap window over the corpus (plan: 4 Window /
     # 4 Sort subtrees). The capped table is ≤ cap rows per group of two
     # ids each; persist it once and every consumer reads the cache
-    # (registered in _GRAPH_CACHES — the returned plan is lazy, so an
+    # (through persist_scoped — the returned plan is lazy, so an
     # in-function unpersist would kill the cache before the caller's
-    # action; cf. unpersist_dedup_caches). Size-gated like
+    # action). Size-gated like
     # repetition_metrics' auto mode: on a small input the four subtrees
     # run as concurrent branches of one job and the cache's
     # materialization barrier only serializes them; at scale the three
@@ -469,11 +450,8 @@ def cooccurrence_pmi(
     # (22 MB) uncached 5.99 s vs cached 0.94 s — the gate sits between
     # those rungs.
     capped = cap_per_group(base, "_g", cap, key_col="_i", seed=seed)
-    from feldman_spark.ops.sizing import plan_size_estimate
-
     if plan_size_estimate(df) > (8 << 20):
-        capped = capped.persist()
-        _GRAPH_CACHES.append(capped)
+        capped = persist_scoped(capped)
     l = capped.select("_g", F.col("_i").alias("item_a"))
     r = capped.select("_g", F.col("_i").alias("item_b"))
     pairs = (

@@ -37,6 +37,8 @@ from pyspark.sql.types import (
     ArrayType, BinaryType, DoubleType, LongType, StringType, StructField, StructType,
 )
 
+from feldman_spark.ops.sizing import persist_scoped
+
 __all__ = [
     "MEDIA_SCHEMA",
     "media_table",
@@ -651,8 +653,8 @@ def media_dedup_incremental(
     # ONE band stack serves all three consumers (within-batch pairs,
     # the history check, the returned store delta); tiny by
     # construction (bands rows x ~30 B per item)
-    batch_bands = media_band_rows(hashed, id_col=id_col,
-                                  hash_col=hash_col, bands=bands).persist()
+    batch_bands = persist_scoped(media_band_rows(
+        hashed, id_col=id_col, hash_col=hash_col, bands=bands))
 
     left = batch_bands.select(F.col(id_col).alias("id_a"),
                               F.col(hash_col).alias("_ha"), "band", "key")

@@ -17,30 +17,12 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from feldman_spark.ops.sizing import persist_scoped, plan_size_estimate
+
 __all__ = ["profile_table", "profile_histogram", "profile_skew", "calibration_bins",
            "join_cardinality", "psi_drift", "bootstrap_ci", "grouped_trend",
            "mutual_info", "k_anonymity", "benford_digits", "grouped_gini", "equidepth_histogram", "null_patterns", "spearman_corr",
-           "POISSON_CDF_HEX", "unpersist_profile_caches"]
-
-# persisted tables registered by operators whose RETURNED plan is lazy
-# (the cache must outlive the call so the caller's action can reuse it)
-# — released by unpersist_profile_caches; bench/sweep harnesses
-# clearCache() between queries, which also works. Mirrors
-# dedup._DEDUP_CACHES / graph._GRAPH_CACHES.
-_PROFILE_CACHES: list = []
-
-
-def unpersist_profile_caches(blocking: bool = False) -> int:
-    """Release every table this module persisted in-process
-    (:func:`mutual_info` registers its joint pair-count table here).
-    Returns the number of tables released. Safe any time: plans built
-    on the tables stay valid and recompute lineage on next use."""
-    n = 0
-    while _PROFILE_CACHES:
-        df = _PROFILE_CACHES.pop()
-        df.unpersist(blocking=blocking)
-        n += 1
-    return n
+           "POISSON_CDF_HEX"]
 
 
 def profile_table(
@@ -542,17 +524,17 @@ def mutual_info(
 
     Large inputs persist the joint count table in-process so all four
     consumers share one pass; in a long-lived session call
-    :func:`unpersist_profile_caches` when done (each call on a large
-    input pins another table until released — ``clearCache()`` between
-    queries, as the bench harness does, also works).
+    :func:`feldman_spark.ops.sizing.release` when done (each call on a
+    large input pins another table until released — ``clearCache()``
+    between queries, as the bench harness does, also works).
     """
     a, b = F.col(f"`{col_a}`"), F.col(f"`{col_b}`")
     # the joint count table feeds FOUR consumers (total, both marginals,
     # the MI sum) — uncached, each re-ran the corpus-wide (a, b)
     # aggregate, four full fact-table passes for one result row.
     # Persist the pair-sized table once (|A|·|B| rows at worst) and
-    # every downstream aggregate is pair-sized (registered in
-    # _PROFILE_CACHES — the returned plan is lazy, so an in-function
+    # every downstream aggregate is pair-sized (through persist_scoped
+    # — the returned plan is lazy, so an in-function
     # unpersist would kill the cache before the caller's action).
     # Size-gated like repetition_metrics' auto mode: on a small input
     # the four passes run as concurrent branches of one job and the
@@ -568,11 +550,8 @@ def mutual_info(
     pairs = (df.filter(a.isNotNull() & b.isNotNull())
              .groupBy(a.alias("_a"), b.alias("_b"))
              .agg(F.count("*").alias("_nab")))
-    from feldman_spark.ops.sizing import plan_size_estimate
-
     if plan_size_estimate(df) > (64 << 20):
-        pairs = pairs.persist()
-        _PROFILE_CACHES.append(pairs)
+        pairs = persist_scoped(pairs)
     tot = pairs.agg(F.sum("_nab").alias("_n"))
     ma = pairs.groupBy("_a").agg(F.sum("_nab").alias("_na"))
     mb = pairs.groupBy("_b").agg(F.sum("_nab").alias("_nb"))

@@ -15,6 +15,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from feldman_spark.ops.sizing import persist_scoped, plan_size_estimate
+
 __all__ = [
     "token_count",
     "bpe_token_count",
@@ -42,7 +44,6 @@ __all__ = [
     "bpe_apply_merges",
     "bpe_apply_merges_udf",
     "lm_score",
-    "unpersist_lm_caches",
     "ppl_buckets",
     "readability",
     "top_ngrams",
@@ -52,11 +53,6 @@ __all__ = [
     "winnow_shared_pairs",
     "STOPWORDS",
 ]
-
-# persisted gram tables registered by lm_score, released by
-# unpersist_lm_caches — the scoped-lifecycle handle for long-lived
-# sessions (bench/sweep harnesses clearCache() instead, which also works)
-_LM_CACHES: List[DataFrame] = []
 
 # tiny per-language stopword lists (function-word n-gram heuristic)
 STOPWORDS: Dict[str, List[str]] = {
@@ -364,8 +360,6 @@ def _repetition_mode(df: DataFrame, mode: str) -> str:
     modes validate. Shared by :func:`repetition_metrics` and
     :func:`gopher_quality` so both route identically."""
     if mode == "auto":
-        from feldman_spark.ops.sizing import plan_size_estimate
-
         mode = "union" if plan_size_estimate(df) > (4 << 20) else "subtrees"
     if mode not in ("union", "subtrees"):
         raise ValueError(f"unknown repetition_metrics mode: {mode!r}")
@@ -1184,7 +1178,8 @@ def lm_score(
     (MEMORY_AND_DISK) because two consumers each would otherwise
     re-derive the explode+aggregate lineage (measured 2× the operator
     at sf5). They stay cached for the session so repeated scoring runs
-    reuse the model; release them with :func:`unpersist_lm_caches` once
+    reuse the model; release them with
+    :func:`feldman_spark.ops.sizing.release` once
     scoring is done (long-lived sessions interleaving MANY heavy
     operators), or ``spark.catalog.clearCache()`` which the bench/sweep
     harnesses call between queries.
@@ -1208,11 +1203,10 @@ def lm_score(
     # once per consumer (measured 2× the whole operator at the sf5
     # corpus). MEMORY_AND_DISK by default; the persisted rows are the
     # post-aggregation gram tables, never raw text.
-    doc_bg = bigrams.groupBy(id_col, "_w1", "_w2").agg(
-        F.count("*").alias("_k")).persist()
-    model = doc_bg.groupBy("_w1", "_w2").agg(
-        F.sum("_k").alias("_c12")).persist()
-    _LM_CACHES.extend([doc_bg, model])
+    doc_bg = persist_scoped(bigrams.groupBy(id_col, "_w1", "_w2").agg(
+        F.count("*").alias("_k")))
+    model = persist_scoped(doc_bg.groupBy("_w1", "_w2").agg(
+        F.sum("_k").alias("_c12")))
     ctx = model.groupBy("_w1").agg(F.sum("_c12").alias("_c1"))
     vocab = (
         model.select(F.col("_w1").alias("_w"))
@@ -1234,19 +1228,6 @@ def lm_score(
             ).alias("lm_logprob"),
         )
     )
-
-
-def unpersist_lm_caches(blocking: bool = False) -> int:
-    """Release every gram table :func:`lm_score` persisted in this
-    process (each call registers its ``doc_bg``/``model`` here). Returns
-    the number of tables released. Safe to call any time: plans built on
-    the tables stay valid, they just recompute lineage on next use."""
-    n = 0
-    while _LM_CACHES:
-        df = _LM_CACHES.pop()
-        df.unpersist(blocking=blocking)
-        n += 1
-    return n
 
 
 def ppl_buckets(
@@ -1289,10 +1270,9 @@ def ppl_buckets(
     # persist the doc-keyed scores: the threshold aggregate AND the
     # final labeling both consume them, and without the barrier each
     # re-runs the scoring joins over the gram tables (r10: measured
-    # ~20% of the operator at sf0.1). Registered with the lm caches —
-    # same lifecycle contract as the gram tables it derives from.
-    scored = lm_score(df, id_col, text_col, alpha, digits).persist()
-    _LM_CACHES.append(scored)
+    # ~20% of the operator at sf0.1). Same persist_scoped lifecycle
+    # as the gram tables it derives from.
+    scored = persist_scoped(lm_score(df, id_col, text_col, alpha, digits))
     fn = "percentile" if exact else "approx_percentile"
     th = scored.agg(
         F.expr(f"{fn}(lm_logprob, array({lo!r}, {hi!r}))").alias("_th"))
@@ -1523,9 +1503,8 @@ def winnow_fingerprints(
     character — through a doc-keyed Window; at sf1 that exchange
     carried ~72M rows that this form never materializes.)
 
-    ``cache=True`` persists the fingerprint table and registers it
-    with the module cache registry (released by
-    :func:`unpersist_lm_caches`) — for callers that fan the
+    ``cache=True`` persists the fingerprint table (released by
+    :func:`feldman_spark.ops.sizing.release`) — for callers that fan the
     fingerprints into several consumers (profile + sharing joins):
     without the barrier each consumer re-runs the md5-per-character
     gram stream, the densest compute in the package.
@@ -1560,8 +1539,7 @@ def winnow_fingerprints(
                    F.expr(f"_mkey div {2 ** 31}").alias("fp_hash"))
            .distinct())
     if cache:
-        out = out.persist()
-        _LM_CACHES.append(out)
+        out = persist_scoped(out)
     return out
 
 
@@ -1654,9 +1632,9 @@ def winnow_shared_pairs(
     aggregate carries (id_a, id_b) rows bounded by df_cap²-per-hash.
 
     The fingerprints collapse FIRST to one ``(fp_hash, id, min pos)``
-    row per document-hash, and that slim table is persisted
-    (registered with :func:`unpersist_lm_caches`) before fanning into
-    the df-filter and both self-join sides — only the per-hash minima
+    row per document-hash, and that slim table is persisted (released
+    by :func:`feldman_spark.ops.sizing.release`) before fanning into the
+    df-filter and both self-join sides — only the per-hash minima
     matter to every downstream aggregate (n_shared counts hashes,
     ``*_first`` are mins over per-hash minima), and without the
     barrier each of the three consumers re-ran the whole
@@ -1684,11 +1662,9 @@ def winnow_shared_pairs(
                                    ShortType)
 
     idc = F.col(f"`{id_col}`")
-    g = (fp.select(idc.alias("_id"), "fp_pos", "fp_hash")
-         .groupBy("fp_hash", "_id")
-         .agg(F.min("fp_pos").alias("_p"))
-         .persist())
-    _LM_CACHES.append(g)
+    g = persist_scoped(fp.select(idc.alias("_id"), "fp_pos", "fp_hash")
+                       .groupBy("fp_hash", "_id")
+                       .agg(F.min("fp_pos").alias("_p")))
     # rows of g are unique per (fp_hash, _id), so count(*) == the
     # distinct-document frequency of the hash
     hdf = (g.groupBy("fp_hash").agg(F.count("*").alias("_df"))

@@ -24,34 +24,15 @@ never moves twice.
 
 from __future__ import annotations
 
-from typing import List, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from feldman_spark.ops.sizing import persist_scoped
+
 __all__ = ["pack_sequences", "chunk_documents", "tfidf_top_terms",
-           "export_jsonl_sharded", "dense_ids",
-           "unpersist_training_caches"]
-
-# persisted tables registered by operators whose RETURNED plan is lazy
-# (the cache must outlive the call so the caller's action can reuse it)
-# — released by unpersist_training_caches; bench/sweep harnesses
-# clearCache() between queries, which also works. Mirrors
-# dedup._DEDUP_CACHES / text._LM_CACHES.
-_TRAINING_CACHES: List[DataFrame] = []
-
-
-def unpersist_training_caches(blocking: bool = False) -> int:
-    """Release every table this module persisted in-process
-    (:func:`dense_ids` registers its range-partitioned vocabulary
-    table here). Returns the number released. Safe any time: plans
-    built on the tables stay valid and recompute lineage on next use."""
-    n = 0
-    while _TRAINING_CACHES:
-        df = _TRAINING_CACHES.pop()
-        df.unpersist(blocking=blocking)
-        n += 1
-    return n
+           "export_jsonl_sharded", "dense_ids"]
 
 
 def pack_sequences(
@@ -293,7 +274,7 @@ def dense_ids(
 
     The range-partitioned distinct-value table feeds TWO consumers —
     the per-partition count action and the numbered output — so it is
-    persisted (registered with :func:`unpersist_training_caches`):
+    persisted (released by :func:`feldman_spark.ops.sizing.release`):
     without the barrier both consumers re-ran the full
     upstream-corpus distinct (2 scans + 2 distinct exchanges + 2
     range exchanges; the persist also guarantees both consumers see
@@ -308,8 +289,7 @@ def dense_ids(
         vals = vals.repartitionByRange(int(num_partitions), F.col("_v"))
     else:
         vals = vals.repartitionByRange(F.col("_v"))
-    tagged = vals.withColumn("_pid", F.spark_partition_id()).persist()
-    _TRAINING_CACHES.append(tagged)
+    tagged = persist_scoped(vals.withColumn("_pid", F.spark_partition_id()))
     # partition-count-sized driver state: one (pid, count) row each
     counts = sorted(
         (r["_pid"], r["n"]) for r in

@@ -11,6 +11,7 @@ from feldman_spark.formats.registry import (
 )
 from feldman_spark.io.csv import (
     FormatError,
+    _sniff_encoding,
     can_create_with_file,
     read_csv,
     read_headers,
@@ -62,6 +63,50 @@ def test_format_sniff(ref_testdata):
     assert not can_create_with_file(
         os.path.join(ref_testdata, "GLAD9_SectionSummary.csv"),
         MANUAL_CORRELATION_FORMAT)
+
+
+def test_utf8_char_across_probe_boundary(spark, tmp_path):
+    # a two-byte character straddling the 1 MiB probe is valid UTF-8:
+    # the sniff must not fall back to Latin-1 (mojibake), and the header
+    # probe, which reads the same 1 MiB, must not fail to decode
+    p = tmp_path / "boundary.csv"
+    head = b"Name,Note\n"
+    filler = b"a" * ((1 << 20) - 1 - len(head) - len(b"x,"))
+    body = b"x," + filler + "é".encode("utf-8") + b"\n"
+    assert len(head + body) > (1 << 20)
+    p.write_bytes(head + body)
+    assert (head + body).index("é".encode("utf-8")) == (1 << 20) - 1
+    assert _sniff_encoding(str(p)) == "UTF-8"
+    assert read_headers(str(p)) == ["Name", "Note"]
+    note = read_csv(spark, str(p)).first()["Note"]
+    assert note.endswith("é")
+
+
+def test_empty_file_has_no_headers(tmp_path):
+    p = tmp_path / "empty.csv"
+    p.write_bytes(b"")
+    assert read_headers(str(p)) == []
+    assert not can_create_with_file(str(p), MANUAL_CORRELATION_FORMAT)
+
+
+def test_empty_manual_correlation_raises_format_error(spark, tmp_path):
+    from feldman_spark.engine import convert_sparse_splice, load_manual_correlation
+
+    ss = tmp_path / "secsumm.csv"
+    ss.write_text(
+        "Site,Hole,Core,Tool,Section,TopDepth,BottomDepth,TopDepthScaled,"
+        "BottomDepthScaled,CuratedLength\n1,A,1,H,1,0,1.5,0,1.5,1.5\n")
+    sp = tmp_path / "sparse.csv"
+    sp.write_text(
+        "Site,Hole,Core,Tool,TopSection,TopOffset,BottomSection,"
+        "BottomOffset,SpliceType\n1,A,1,H,1,10,1,100,APPEND\n")
+    mc = tmp_path / "mancorr.csv"
+    mc.write_bytes(b"")
+    assert load_manual_correlation(spark, str(mc)) == (None, None)
+    with pytest.raises(FormatError, match="could not be loaded"):
+        convert_sparse_splice(
+            spark, str(ss), str(sp), str(tmp_path / "aff.csv"),
+            str(tmp_path / "sit.csv"), manual_correlation_path=str(mc))
 
 
 def test_question_marks_null(spark, tmp_out):

@@ -1879,19 +1879,58 @@ def test_ppl_buckets_rejects_wrong_cut_count(spark):
         ppl_buckets(d, cuts=(0.25, 0.5, 0.75))
 
 
-def test_unpersist_lm_caches_releases_everything(spark):
-    """lm_score persists two gram tables per call; the lifecycle helper
-    must release them all — no cached plan may survive it."""
-    from feldman_spark.pipeline.text import lm_score, unpersist_lm_caches
+def test_release_frees_lm_score_caches(spark):
+    """lm_score persists two gram tables per call; release() must free
+    them all — no cached plan may survive it."""
+    from feldman_spark.ops.sizing import release
+    from feldman_spark.pipeline.text import lm_score
 
     spark.catalog.clearCache()
-    unpersist_lm_caches()      # drain any registrations from other tests
+    release()      # drain any registrations from other tests
     d = spark.createDataFrame(
         [(1, "a b a b c"), (2, "a b c d e")], ["doc_id", "text"])
     assert lm_score(d).count() == 2
     cm = spark._jsparkSession.sharedState().cacheManager()
     assert not cm.isEmpty()
-    assert unpersist_lm_caches() == 2
+    assert release() == 2
+    assert cm.isEmpty()
+
+
+def test_release_frees_lsh_and_splice_caches(spark):
+    """minhash_lsh_pairs and the engine's E1 pipeline persist tables
+    that outlive the call; release() must free those too."""
+    from feldman_spark.engine import convert_sparse_splice_frames
+    from feldman_spark.ops.sizing import release
+
+    spark.catalog.clearCache()
+    release()
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps"), (2, "the quick brown fox jumps"),
+         (3, "an entirely different line")], ["doc_id", "text"])
+    pairs = minhash_lsh_pairs(docs, threshold=0.5)
+    assert {(r["doc1"], r["doc2"]) for r in pairs.collect()} >= {(1, 2)}
+
+    secsumm = spark.createDataFrame(
+        [("1", "A", "1", "H", str(s), (s - 1) * 1.5, s * 1.5,
+          (s - 1) * 1.5, s * 1.5, 1.5, "") for s in (1, 2, 3)],
+        "Site string, Hole string, Core string, Tool string, "
+        "Section string, TopDepth double, BottomDepth double, "
+        "TopDepthScaled double, BottomDepthScaled double, "
+        "CuratedLength double, Gaps string",
+    ).coalesce(1).withColumn("_idx", F.monotonically_increasing_id())
+    sparse = spark.createDataFrame(
+        [("1", "A", "1", "H", "1", 10.0, "3", 100.0, "APPEND", None, "", "",
+          0)],
+        "Site string, Hole string, Core string, Tool string, "
+        "TopSection string, TopOffset double, BottomSection string, "
+        "BottomOffset double, SpliceType string, Gap double, "
+        "DataUsed string, Comment string, _idx long")
+    affine, sit = convert_sparse_splice_frames(secsumm, sparse)
+    assert affine.count() == 1 and sit.count() == 1
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    assert not cm.isEmpty()
+    assert release() > 0
     assert cm.isEmpty()
 
 

@@ -221,7 +221,6 @@ def test_streaming_splice_export(spark, tmp_out, ref_testdata):
     import os
     from feldman_spark.engine import (
         export_measurement_frames, load_affine, load_measurement, load_sit)
-    from feldman_spark.export import ROW_ID
     from feldman_spark.streaming.events import run_stream_to_memory
 
     golden = "/root/repo/.tmp/golden"
@@ -230,7 +229,7 @@ def test_streaming_splice_export(spark, tmp_out, ref_testdata):
         pytest.skip("golden outputs not generated yet")
 
     depth = "Sediment Depth, unscaled (MBS / CSF-A)"
-    md = load_measurement(spark, f"{ref_testdata}/GLAD9_Site1_XRF.csv", depth).drop(ROW_ID)
+    md = load_measurement(spark, f"{ref_testdata}/GLAD9_Site1_XRF.csv", depth)
     src = f"{tmp_out}/md_stream_src"
     md.repartition(4).write.mode("overwrite").parquet(src)
 

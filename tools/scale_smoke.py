@@ -66,7 +66,6 @@ def main() -> None:
 
     from feldman_spark.session import get_spark
     from feldman_spark.engine import convert_sparse_splice_frames, export_measurement_frames
-    from feldman_spark.export import ROW_ID
     from feldman_spark.io.parquet import write_measurement_parquet
 
     spark = get_spark(app_name="scale-smoke", master=f"local[{args.cpus}]",
@@ -108,7 +107,7 @@ def main() -> None:
     print(f"generated+wrote {args.rows:,} measurement rows in {gen_s:.1f}s", file=sys.stderr)
 
     # --- E2 over the partitioned parquet ----------------------------------
-    md2 = spark.read.parquet(md_path).withColumn(ROW_ID, F.monotonically_increasing_id())
+    md2 = spark.read.parquet(md_path)
     sit_idx = sit.coalesce(1).withColumn("_idx", F.monotonically_increasing_id())
     t0 = time.time()
     res = export_measurement_frames(md2, affine, sit_idx, "depth")
