@@ -24,7 +24,7 @@ from .formats.registry import (
     SPARSE_SPLICE_FORMAT,
 )
 from .io.csv import FormatError, can_create_with_file, read_tabular, write_csv
-from .ops.filters import valid_section_column
+from .ops.filters import invalid_section_sql
 from .ops.sizing import persist_scoped
 from .splice import (
     IDX,
@@ -95,16 +95,21 @@ def load_manual_correlation(
 
 
 def _validate_sections(secsumm: DataFrame, sparse: DataFrame) -> None:
-    # F7 (feldman.py:107-112)
-    for col in ("TopSection", "BottomSection"):
-        if not valid_section_column(sparse, col):
+    """F7 (feldman.py:107-112) in one Spark job: one flag per checked
+    column, false on the other table's rows, OR-ed over the union of both
+    tables in one partition. The reference's order picks the error."""
+    top, bottom, section = (
+        invalid_section_sql(c) for c in ("TopSection", "BottomSection", "Section"))
+    flags = sparse.selectExpr(f"{top} AS top", f"{bottom} AS bottom", "false AS section") \
+        .unionByName(secsumm.selectExpr("false AS top", "false AS bottom", f"{section} AS section"))
+    bad = flags.coalesce(1) \
+        .selectExpr("bool_or(top)", "bool_or(bottom)", "bool_or(section)").collect()[0]
+    for failed, what in zip(bad, ("TopSection column in Sparse Splice",
+                                  "BottomSection column in Sparse Splice",
+                                  "Section column in Section Summary")):
+        if failed:
             raise FormatError(
-                "{} column in Sparse Splice contains one or more "
-                "non-integer values.".format(col))
-    if not valid_section_column(secsumm, "Section"):
-        raise FormatError(
-            "Section column in Section Summary contains one or more "
-            "non-integer values.")
+                "{} contains one or more non-integer values.".format(what))
 
 
 def convert_sparse_splice_frames(

@@ -28,10 +28,10 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import List, Optional
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .formats.columns import find_all_starts_with
+from .formats.columns import find_all_starts_with, quote_ident
 from .ops.windows import section_range
 
 __all__ = ["SpliceExport", "export_columns", "splice_export"]
@@ -85,8 +85,9 @@ def splice_export(
     """Export measurement rows with composite depth and on-/off-splice flag.
     One broadcast left join per stage; the measurement side never shuffles.
     """
-    depth = F.col(f"`{depth_column}`")
-    out_cols = export_columns(md.columns)
+    depth = F.col(quote_ident(depth_column))
+    md_columns = md.columns
+    out_cols = export_columns(md_columns)
     sit_exp = _expand_sit_sections(sit)
 
     cond = (
@@ -98,18 +99,22 @@ def splice_export(
     if not whole_splice_section:
         cond = cond & depth.between(F.col("__top_csf"), F.col("__bot_csf"))
 
-    def finalize(df: DataFrame, offset_col: Column, flag: Column) -> DataFrame:
-        return df.withColumns({
-            "Splice Depth": depth + offset_col,
-            "Offset": offset_col,
+    def finalize(df: DataFrame, offset: str, flag: str) -> DataFrame:
+        # one selectExpr: a Column per output column would cost several
+        # py4j round trips each
+        added = {
+            "Splice Depth": f"{quote_ident(depth_column)} + {offset}",
+            "Offset": offset,
             "On-Splice": flag,
-        }).select([F.col(f"`{c}`") for c in out_cols])
+        }
+        return df.selectExpr(*[
+            f"{added[c]} AS {quote_ident(c)}" if c in added else quote_ident(c)
+            for c in out_cols])
 
     if not include_off_splice:
         joined = md.join(F.broadcast(sit_exp), cond, "inner")
         return SpliceExport(
-            spliced=finalize(joined, F.col("__offset"), F.lit("splice")),
-            unwritten=None)
+            spliced=finalize(joined, "__offset", "'splice'"), unwritten=None)
 
     joined = md.join(F.broadcast(sit_exp), cond, "left")
 
@@ -133,9 +138,9 @@ def splice_export(
     is_off = F.col("__offset").isNull() & F.col("__aoffset").isNotNull()
     spliced = finalize(
         joined.filter(is_on | is_off),
-        F.coalesce(F.col("__offset"), F.col("__aoffset")),
-        F.when(is_on, F.lit("splice")).otherwise(F.lit("off-splice")),
+        "coalesce(__offset, __aoffset)",
+        "CASE WHEN __offset IS NOT NULL THEN 'splice' ELSE 'off-splice' END",
     )
     unwritten = joined.filter(F.col("__offset").isNull() & F.col("__aoffset").isNull()) \
-        .select([F.col(f"`{c}`") for c in md.columns])
+        .selectExpr(*[quote_ident(c) for c in md_columns])
     return SpliceExport(spliced=spliced, unwritten=unwritten)

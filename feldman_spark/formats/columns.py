@@ -35,6 +35,7 @@ __all__ = [
     "find_starts_with",
     "find_all_starts_with",
     "map_columns",
+    "quote_ident",
 ]
 
 
@@ -105,6 +106,12 @@ def find_starts_with(startstr: str, names: Sequence[str]) -> Optional[str]:
 def find_all_starts_with(startstr: str, names: Sequence[str]) -> List[str]:
     las_start = las(startstr)
     return [n for n in names if las(n).startswith(las_start)]
+
+
+def quote_ident(colname: str) -> str:
+    """``colname`` as a Spark SQL identifier: backtick-quoted, with any
+    backtick inside the name doubled."""
+    return "`" + colname.replace("`", "``") + "`"
 
 
 @dataclass

@@ -16,6 +16,15 @@ Re-expresses the reference's IO layer (``tabular/pandasutils.py:19-49``,
 * string columns are null-free: null → ``""``
   (``tabular/pandasutils.py:102-108``).
 
+The schema is **declared, not inferred**: the driver-side probe that sniffs
+the encoding (the first 1 MiB) also yields the header line, which is
+tokenized and made unique the way Spark's own header inference does it, and
+the read declares the resulting all-string ``StructType``. Building a read
+therefore runs no Spark job. The per-column projections (``?``-family nulls,
+the blank-row filter, the format casts, the export rounding and renames) are
+each one ``selectExpr``: under PySpark 4.1 classic every Column-API call is
+several py4j round trips, and a 30-column table paid thousands of them.
+
 At 100 TB, measurement data lives in parquet, not CSV; these readers are the
 compatibility edge. They are still fully distributed scans — only the header
 probe and encoding sniff touch the driver.
@@ -27,16 +36,19 @@ import codecs
 import csv as _csv
 import io as _io
 import os
-from typing import Dict, List, Optional, Sequence
+import re
+from collections import Counter
+from typing import List, Optional, Tuple
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..formats.columns import (
     TabularFormat,
     find_match,
-    las,
     map_columns,
+    quote_ident,
     split_caps,
 )
 from ..formats.registry import pretty_rename_map
@@ -53,75 +65,142 @@ __all__ = [
     "read_correlator_funky",
 ]
 
-NA_SENTINELS = ["?", "??", "???"]
+NA_SENTINELS = ("?", "??", "???")
+_NA_LIST = "({})".format(", ".join("'{}'".format(v) for v in NA_SENTINELS))
+
+# What Java's String.trim and Spark's CSV tokenizer (univocity) treat as
+# whitespace: every char up to and including the space.
+_WS = "".join(map(chr, range(33)))
+# Spark's line reader splits on \n, \r\n and a bare \r, nothing else.
+_LINE_BREAK = re.compile("\r\n|\r|\n")
+_PROBE_BYTES = 1 << 20
 
 
 class FormatError(Exception):
     """Input does not satisfy a tabular format (``tabular/csvio.py:15``)."""
 
 
-def _decode_probe(path: str, encoding: str, probe_bytes: int = 1 << 20) -> str:
-    """The first ``probe_bytes`` of ``path``, decoded. Incremental, so a
-    multi-byte character cut by the probe boundary is held back instead
-    of failing the decode; a file shorter than the probe must decode whole."""
+def _probe(path: str) -> Tuple[str, str, bool]:
+    """``(spark_encoding, text, complete)`` for the first 1 MiB of
+    ``path``: UTF-8 first, Latin-1 fallback — mirrors the reference's
+    two-attempt read (``tabular/pandasutils.py:19-36``); Latin-1 decodes
+    any byte sequence, so it is a safe retry. The decode is incremental, so
+    a multi-byte character cut by the probe boundary is held back instead
+    of failing it. ``complete`` is False when the file runs past the probe."""
     with open(path, "rb") as f:
-        data = f.read(probe_bytes)
-    decoder = codecs.getincrementaldecoder(encoding)()
-    return decoder.decode(data, final=len(data) < probe_bytes)
-
-
-def _sniff_encoding(path: str, probe_bytes: int = 1 << 20) -> str:
-    """UTF-8 first, Latin-1 fallback — mirrors the reference's two-attempt
-    read (``tabular/pandasutils.py:19-36``). Driver-side peek of the first
-    ~1 MB only; Latin-1 decodes any byte sequence, so it is a safe retry."""
+        data = f.read(_PROBE_BYTES)
+    complete = len(data) < _PROBE_BYTES
     try:
-        _decode_probe(path, "utf-8", probe_bytes)
-        return "UTF-8"
-    except (UnicodeDecodeError, OSError):
-        return "ISO-8859-1"
+        text = codecs.getincrementaldecoder("utf-8")().decode(data, final=complete)
+        return "UTF-8", text, complete
+    except UnicodeDecodeError:
+        return "ISO-8859-1", data.decode("latin-1"), complete
+
+
+def _header_line(text: str, complete: bool) -> Optional[str]:
+    """The first line with a non-whitespace char, BOM stripped — the line
+    Spark's CSV reader takes as the header — or None when the probed text
+    holds no such line in full."""
+    lines = _LINE_BREAK.split(text.lstrip("\ufeff"))
+    if not complete:
+        lines = lines[:-1]  # may be cut by the probe boundary
+    return next((line for line in lines if line.strip(_WS)), None)
 
 
 def read_headers(path: str) -> List[str]:
     """Header-only probe without a full scan (``tabular/pandasutils.py:41-46``).
     An empty file has no headers."""
-    enc = _sniff_encoding(path)
-    raw = _decode_probe(path, "utf-8-sig" if enc == "UTF-8" else "latin-1")
-    # universal newlines: files in the wild use \n, \r\n, or bare \r
-    first = raw.splitlines()[0] if raw else ""
-    reader = _csv.reader(_io.StringIO(first), skipinitialspace=True)
+    _, text, complete = _probe(path)
+    line = _header_line(text, complete) or ""
+    reader = _csv.reader(_io.StringIO(line), skipinitialspace=True)
     return [h.strip() for h in next(reader, [])]
+
+
+def _split_header(line: str, sep: str) -> List[str]:
+    r"""Tokenize one header line as Spark's CSV reader does with its default
+    quote ``"`` and escape ``\``: whitespace outside quotes is trimmed,
+    whitespace inside kept; ``\"`` inside quotes is a quote; a quote that
+    closes before the value ends makes the whole value literal text up to
+    the next ``sep``; an unclosed quote runs to the end of the line."""
+    fields = []
+    i, n = 0, len(line)
+    while True:
+        while i < n and line[i] in _WS and not line.startswith(sep, i):
+            i += 1
+        start = i
+        if i < n and line[i] == '"':
+            buf, j = [], i + 1
+            while j < n and line[j] != '"':
+                if line.startswith('\\"', j):
+                    j += 1
+                buf.append(line[j])
+                j += 1
+            k = j + 1
+            while k < n and line[k] in _WS and not line.startswith(sep, k):
+                k += 1
+            if k >= n or line.startswith(sep, k):
+                fields.append("".join(buf))
+                if k >= n:
+                    return fields
+                i = k + len(sep)
+                continue
+            search_from = j + 1
+        else:
+            search_from = start
+        end = line.find(sep, search_from)
+        fields.append(line[start:n if end < 0 else end].rstrip(_WS))
+        if end < 0:
+            return fields
+        i = end + len(sep)
+
+
+def _safe_header(names: List[str]) -> List[str]:
+    """Spark's ``CSVUtils.makeSafeHeader`` under its default case
+    insensitivity: an empty name becomes ``_c{i}``, and every name that
+    occurs more than once, compared lower-cased, gets its index appended."""
+    counts = Counter(v.lower() for v in names)
+    return [
+        f"_c{i}" if not v else f"{v}{i}" if counts[v.lower()] > 1 else v
+        for i, v in enumerate(names)
+    ]
 
 
 def read_csv(spark: SparkSession, path: str, sep: str = ",") -> DataFrame:
     """S1: distributed CSV scan, all columns as strings, blank lines
-    skipped, BOM tolerated, ``?``-family → null."""
-    enc = _sniff_encoding(path)
-    df = (
+    skipped, BOM tolerated, ``?``-family → null.
+
+    The all-string schema is declared from the header probe, with the
+    column names Spark's own inference would give, so the read runs no
+    Spark job. A path the driver cannot open, or one without a header in
+    its first 1 MiB (an empty file, say), is left to Spark's inference."""
+    try:
+        enc, text, complete = _probe(path)
+        line = _header_line(text, complete)
+    except OSError:
+        enc, line = "ISO-8859-1", None
+    reader = (
         spark.read.option("header", True)
         .option("encoding", enc)
         .option("sep", sep)
         .option("ignoreLeadingWhiteSpace", True)
         .option("ignoreTrailingWhiteSpace", True)
         .option("inferSchema", False)
-        .csv(path)
     )
-    # Strip any BOM remnant from the first header.
-    cols = df.columns
-    if cols and cols[0].startswith("﻿"):
-        df = df.withColumnRenamed(cols[0], cols[0].lstrip("﻿"))
+    if line is not None:
+        names = _safe_header(_split_header(line, sep))
+        reader = reader.schema(
+            StructType([StructField(c, StringType()) for c in names]))
+    df = reader.csv(path)
+    quoted = [quote_ident(c) for c in df.columns]
+    if not quoted:
+        return df
     # '?' '??' '???' parse as null in every column (tabular/csvio.py:21).
-    df = df.select([
-        F.when(F.col(f"`{c}`").isin(NA_SENTINELS), F.lit(None)).otherwise(F.col(f"`{c}`")).alias(c)
-        for c in df.columns
+    df = df.selectExpr(*[
+        f"CASE WHEN {q} IN {_NA_LIST} THEN NULL ELSE {q} END AS {q}"
+        for q in quoted
     ])
     # Drop fully-blank rows (pandas skip_blank_lines).
-    non_null = None
-    for c in df.columns:
-        cond = F.col(f"`{c}`").isNotNull() & (F.col(f"`{c}`") != "")
-        non_null = cond if non_null is None else (non_null | cond)
-    if non_null is not None:
-        df = df.filter(non_null)
-    return df
+    return df.filter(" OR ".join(f"({q} IS NOT NULL AND {q} != '')" for q in quoted))
 
 
 def split_site_hole(df: DataFrame) -> DataFrame:
@@ -138,23 +217,20 @@ def split_site_hole(df: DataFrame) -> DataFrame:
     })
 
 
-def _string_col(name: str) -> Column:
-    # STRING columns are null-free: null → "" (tabular/pandasutils.py:102-108).
-    return F.coalesce(F.col(f"`{name}`").cast("string"), F.lit(""))
-
-
 def apply_format(df: DataFrame, fmt: TabularFormat) -> DataFrame:
     """P1+P2: normalize-and-match headers against the format's synonym
     metadata, fail on missing required columns, default-fill missing
     optional ones, rename to canonical names, and cast to the declared
-    types (``tabular/csvio.py:19-46``).
+    types (``tabular/csvio.py:19-46``). STRING columns are null-free:
+    null → ``""`` (``tabular/pandasutils.py:102-108``).
 
     Column order contract: input order is preserved (matched columns are
     renamed in place, extras pass through untouched), missing optional
     columns are appended at the end — exactly the reference's behavior.
     """
     df = split_site_hole(df)
-    colmap = map_columns(fmt.cols, df.columns)  # canonical -> input header
+    cols = df.columns
+    colmap = map_columns(fmt.cols, cols)  # canonical -> input header
 
     missing_req = [c.name for c in fmt.cols if not c.optional and c.name not in colmap]
     if missing_req:
@@ -165,21 +241,21 @@ def apply_format(df: DataFrame, fmt: TabularFormat) -> DataFrame:
     inverse = {v: k for k, v in colmap.items()}  # input header -> canonical
     by_name = {c.name: c for c in fmt.cols}
 
-    exprs: List[Column] = []
-    for raw in df.columns:
+    exprs: List[str] = []
+    for raw in cols:
+        q = quote_ident(raw)
         if raw in inverse:
             cid = by_name[inverse[raw]]
-            if cid.is_numeric():
-                exprs.append(F.col(f"`{raw}`").cast("double").alias(cid.name))
-            else:
-                exprs.append(_string_col(raw).alias(cid.name))
+            value = (f"CAST({q} AS DOUBLE)" if cid.is_numeric()
+                     else f"COALESCE(CAST({q} AS STRING), '')")
+            exprs.append(f"{value} AS {quote_ident(cid.name)}")
         else:
-            exprs.append(F.col(f"`{raw}`"))  # passthrough untouched
+            exprs.append(q)  # passthrough untouched
     for cid in fmt.cols:
         if cid.optional and cid.name not in colmap:
-            default = F.lit("") if cid.is_string() else F.lit(None).cast("double")
-            exprs.append(default.alias(cid.name))
-    return df.select(exprs)
+            default = "''" if cid.is_string() else "CAST(NULL AS DOUBLE)"
+            exprs.append(f"{default} AS {quote_ident(cid.name)}")
+    return df.selectExpr(*exprs)
 
 
 def read_tabular(spark: SparkSession, path: str, fmt: TabularFormat) -> DataFrame:
@@ -224,11 +300,16 @@ def write_csv(
     """
     df = _drop_site_hole(df)
     if fmt is not None:
-        if round_digits is not None:
-            num_cols = [c.name for c in fmt.cols if c.is_numeric() and c.name in df.columns]
-            # pandas .round() is HALF_EVEN (feldman.py:538-544) -> bround
-            df = df.withColumns({c: F.bround(F.col(f"`{c}`"), round_digits) for c in num_cols})
-        df = df.withColumnsRenamed(pretty_rename_map(fmt, df.columns, org))
+        cols = df.columns
+        rounded = ({c.name for c in fmt.cols if c.is_numeric()}
+                   if round_digits is not None else set())
+        renames = pretty_rename_map(fmt, cols, org)
+        # pandas .round() is HALF_EVEN (feldman.py:538-544) -> bround
+        df = df.selectExpr(*[
+            (f"bround({quote_ident(c)}, {round_digits})" if c in rounded
+             else quote_ident(c)) + f" AS {quote_ident(renames.get(c, c))}"
+            for c in cols
+        ])
     import glob
     import shutil
 

@@ -13,12 +13,15 @@ from typing import Dict, Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..formats.columns import quote_ident
+
 __all__ = [
     "eq_filter",
     "conjunctive_filter",
     "range_filter",
     "in_filter",
     "point_in_interval",
+    "invalid_section_sql",
     "valid_section_column",
     "winsorize",
     "with_group_zscore",
@@ -67,13 +70,19 @@ def point_in_interval(
     return df.filter(pred)
 
 
+def invalid_section_sql(colname: str) -> str:
+    """F7 as a SQL predicate: true for a ``colname`` value that is neither
+    an integer string nor the ``'CC'`` sentinel (``feldman.py:78-89``),
+    null for a null value."""
+    q = quote_ident(colname)
+    return f"NOT ({q} RLIKE '^-?[0-9]+$' OR {q} = 'CC')"
+
+
 def valid_section_column(df: DataFrame, colname: str) -> bool:
     """F7: True iff every value in ``colname`` is an integer string or the
     ``'CC'`` sentinel (``feldman.py:78-89``). One distributed count, no
     collect of the data."""
-    col = F.col(f"`{colname}`")
-    bad = df.filter(~(col.rlike(r"^-?\d+$") | (col == "CC"))).limit(1).count()
-    return bad == 0
+    return df.filter(invalid_section_sql(colname)).limit(1).count() == 0
 
 
 def winsorize(

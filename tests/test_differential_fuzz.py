@@ -18,10 +18,10 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from conftest import REFERENCE as REF, SCRATCH, require_reference
 from feldman_spark.engine import convert_sparse_splice
 
-REF = "/root/reference"
-OUT = "/root/repo/.tmp/fuzz"
+OUT = os.path.join(SCRATCH, "fuzz")
 
 _REF_SCRIPT = """
 import sys, logging
@@ -329,6 +329,7 @@ def test_e1_differential_option_matrix(spark_fuzz, steps, gap_pattern,
     sparse_splice_depth) under the same generated geometries — fixture
     combos are in test_option_parity; this covers them against arbitrary
     interval chains."""
+    require_reference()
     kw = {}
     if use_scaled:
         kw["use_scaled_depths"] = True
@@ -343,4 +344,5 @@ def test_e2_differential_not_vacuous():
     """Runs after the fuzz above (file order): most generated geometries
     must have reached the export comparison, else the E2 fuzz is
     silently testing nothing."""
+    require_reference()
     assert len(_e2_compared) >= 5, _e2_compared

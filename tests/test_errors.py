@@ -5,7 +5,7 @@ diagnosis rather than produce garbage."""
 import pytest
 from pyspark.sql import functions as F
 
-from feldman_spark.engine import convert_sparse_splice_frames
+from feldman_spark.engine import _validate_sections, convert_sparse_splice_frames
 from feldman_spark.io.csv import FormatError
 
 
@@ -67,3 +67,38 @@ def test_non_integer_section_validation(spark):
     ])
     with pytest.raises(FormatError, match="non-integer"):
         convert_sparse_splice_frames(_secsumm(spark), sp)
+
+
+def _valid_sparse(spark, top="1", bottom="2"):
+    return _sparse(spark, [
+        ("1", "A", "1", "H", top, 10.0, bottom, 100.0, "TIE", None, "", "", 0),
+    ])
+
+
+def _secsumm_sections(spark, section):
+    # _secsumm with core 1's third section renamed
+    return _secsumm(spark).withColumn(
+        "Section",
+        F.when((F.col("Core") == "1") & (F.col("Section") == "3"), F.lit(section))
+        .otherwise(F.col("Section")))
+
+
+@pytest.mark.parametrize("top,bottom,section,message", [
+    ("1", "2x", "3", "BottomSection column in Sparse Splice"),
+    ("1", "2", "3.0", "Section column in Section Summary"),
+    # the reference's order picks the error when several columns fail
+    ("1x", "2x", "x", "TopSection column in Sparse Splice"),
+    ("1", "2.5", "x", "BottomSection column in Sparse Splice"),
+])
+def test_non_integer_section_names_the_column(spark, top, bottom, section, message):
+    with pytest.raises(FormatError, match=message + " contains one or more non-integer"):
+        convert_sparse_splice_frames(
+            _secsumm_sections(spark, section), _valid_sparse(spark, top, bottom))
+
+
+def test_section_validation_is_one_job(spark, count_jobs):
+    # CC and negative integers are valid sections (feldman.py:78-89)
+    secsumm = _secsumm_sections(spark, "CC")
+    sparse = _valid_sparse(spark, top="-1", bottom="CC")
+    _, jobs = count_jobs(lambda: _validate_sections(secsumm, sparse))
+    assert jobs == 1

@@ -1,5 +1,5 @@
 """End-to-end golden parity: run the reference implementation (imported
-read-only from /root/reference, outputs under /root/repo/.tmp) and our Spark
+read-only from the reference checkout, outputs under the checkout's .tmp/) and our Spark
 engine on the same GLAD9 inputs, and compare results numerically.
 
 This is the strongest correctness signal we have: full E1 (sparse splice →
@@ -15,10 +15,8 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from conftest import GOLDEN as OUT, REFERENCE as REF
 from feldman_spark.engine import convert_sparse_splice, export_measurement_data
-
-REF = "/root/reference"
-OUT = "/root/repo/.tmp/golden"
 
 DEPTH_COL = "Sediment Depth, unscaled (MBS / CSF-A)"
 

@@ -11,7 +11,7 @@ from feldman_spark.formats.registry import (
 )
 from feldman_spark.io.csv import (
     FormatError,
-    _sniff_encoding,
+    _probe,
     can_create_with_file,
     read_csv,
     read_headers,
@@ -76,7 +76,7 @@ def test_utf8_char_across_probe_boundary(spark, tmp_path):
     assert len(head + body) > (1 << 20)
     p.write_bytes(head + body)
     assert (head + body).index("é".encode("utf-8")) == (1 << 20) - 1
-    assert _sniff_encoding(str(p)) == "UTF-8"
+    assert _probe(str(p))[0] == "UTF-8"
     assert read_headers(str(p)) == ["Name", "Note"]
     note = read_csv(spark, str(p)).first()["Note"]
     assert note.endswith("é")
@@ -107,6 +107,48 @@ def test_empty_manual_correlation_raises_format_error(spark, tmp_path):
         convert_sparse_splice(
             spark, str(ss), str(sp), str(tmp_path / "aff.csv"),
             str(tmp_path / "sit.csv"), manual_correlation_path=str(mc))
+
+
+# header line, data line, sep: each header must get the names and the
+# row values that Spark's own header inference gives
+HEADER_CASES = {
+    "duplicate": ("a,b,a", "1,2,3", ","),
+    "case_duplicate": ("b,B", "1,2", ","),
+    "empty_name": ("a,,b", "1,2,3", ","),
+    "padded_and_quoted": (' a ,"x, y",  " z "  ,b', "1,2,3,4", ","),
+    "backtick": ("a`b,c", "1,2", ","),
+    "utf8_bom": ("\ufeffa,b", "1,2", ","),
+    "semicolon": ("a;b;a", "1;2,5;3", ";"),
+}
+
+
+@pytest.mark.parametrize("case", list(HEADER_CASES))
+def test_header_parity_with_spark_inference(spark, tmp_path, case):
+    header, row, sep = HEADER_CASES[case]
+    p = tmp_path / f"{case}.csv"
+    p.write_bytes(f"{header}\n{row}\n".encode("utf-8"))
+    inferred = (
+        spark.read.option("header", True).option("sep", sep)
+        .option("ignoreLeadingWhiteSpace", True)
+        .option("ignoreTrailingWhiteSpace", True)
+        .csv(str(p)))
+    ours = read_csv(spark, str(p), sep=sep)
+    assert ours.columns == inferred.columns
+    assert [tuple(r) for r in ours.collect()] == [tuple(r) for r in inferred.collect()]
+
+
+def test_read_tabular_runs_no_job(spark, tmp_path, count_jobs):
+    # the schema is declared from the driver-side header probe: building
+    # the read, the null mapping, the blank-row filter and the casts
+    # start no Spark job
+    p = tmp_path / "secsumm.csv"
+    p.write_text(
+        "Site,Hole,Core,Tool,Section,TopDepth,BottomDepth,TopDepthScaled,"
+        "BottomDepthScaled,CuratedLength\n1,A,1,H,1,0,1.5,0,1.5,1.5\n")
+    df, jobs = count_jobs(lambda: read_tabular(spark, str(p), SECTION_SUMMARY_FORMAT))
+    assert jobs == 0
+    assert df.columns[:5] == ["Site", "Hole", "Core", "Tool", "Section"]
+    assert df.first()["BottomDepth"] == 1.5
 
 
 def test_question_marks_null(spark, tmp_out):

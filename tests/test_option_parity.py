@@ -10,10 +10,10 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from conftest import REFERENCE as REF, SCRATCH, require_reference
 from feldman_spark.engine import convert_sparse_splice
 
-REF = "/root/reference"
-OUT = "/root/repo/.tmp/optparity"
+OUT = os.path.join(SCRATCH, "optparity")
 
 COMBOS = {
     "scaled": dict(use_scaled_depths=True),
@@ -205,6 +205,7 @@ def test_scaled_compression_branch_parity(spark):
     length *in cm* — the reference's mixed-unit comparison, preserved
     bug-for-bug. No shipped fixture triggers it; craft one and compare both
     implementations."""
+    require_reference()
     case = f"{OUT}/compression"
     os.makedirs(case, exist_ok=True)
     ss_path, sp_path = f"{case}/ss.csv", f"{case}/sp.csv"

@@ -54,7 +54,7 @@ def test_e2_export_plan_all_broadcast(spark, ref_testdata, tmp_out):
     md = spark.read.parquet(md_path)
 
     import os
-    golden = "/root/repo/.tmp/golden"
+    from conftest import GOLDEN as golden
     if not os.path.exists(f"{golden}/our_affine.csv"):
         pytest.skip("golden outputs not generated yet (run test_golden_parity first)")
     affine = load_affine(spark, f"{golden}/our_affine.csv")

@@ -223,7 +223,7 @@ def test_streaming_splice_export(spark, tmp_out, ref_testdata):
         export_measurement_frames, load_affine, load_measurement, load_sit)
     from feldman_spark.streaming.events import run_stream_to_memory
 
-    golden = "/root/repo/.tmp/golden"
+    from conftest import GOLDEN as golden
     if not os.path.exists(f"{golden}/our_affine.csv"):
         import pytest
         pytest.skip("golden outputs not generated yet")
