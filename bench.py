@@ -7,13 +7,12 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 
 ``value`` is the summed wall-clock of all headline queries (execution time
 to a fully-materialized result, JVM/session startup excluded). Each query
-is timed as the median of REPS runs (default 3) to a ``noop`` sink — the
-noop data source materializes every row of every column without letting
-Catalyst prune the projection the way ``count()`` does, and the median
-absorbs one-off GC/CPU-contention spikes that a single run reports as
-phantom regressions. Each query additionally gets ONE untimed warm-up
-run so per-query one-time costs (Janino compile of its generated
-stages, persist materialization) don't pollute the steady-state median.
+is measured by ``tools/measure.py::run``: one untimed warm-up, then the
+median of $SPARK_GRAFT_BENCH_REPS (default 3) timed runs to the ``noop``
+sink. The median absorbs one-off GC/CPU-contention spikes; the floors and
+the regression gate key on it. ``first_sec`` keeps each warm-up's time
+(persist-heavy dedup queries run cold at 2.5-6x steady state) and
+``min_sec`` the fastest timed run, unmoved by a burst that spares a rep.
 """
 
 from __future__ import annotations
@@ -25,6 +24,8 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from tools import measure  # noqa: E402
 
 HEADLINE = [
     # the reference-parity operator surface, heaviest shapes first
@@ -286,19 +287,8 @@ def main() -> None:
     _autosize_driver_memory(sf_dir)
 
     import __spark_entry__ as entry
-    from feldman_spark.session import get_spark
 
-    spark = get_spark(app_name="feldman-spark-bench", master=f"local[{cpus}]",
-                      shuffle_partitions=int(cpus),
-                      extra_conf={"spark.ui.showConsoleProgress": "false"})
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # warm-up: JVM codegen paths, parquet footers, and the Python/Arrow
-    # worker pool — so per-query numbers measure steady-state execution,
-    # not one-time session initialization
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-    spark.range(int(cpus)).repartition(int(cpus)).mapInPandas(
-        lambda it: it, "id long").count()
+    spark = measure.session("feldman-spark-bench", sf_dir, cpus)
 
     # the IVF index is built once and amortized across queries in
     # production — build it outside the timed region, report separately
@@ -308,47 +298,23 @@ def main() -> None:
 
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
     qs = entry.queries()
-    timings = {}
-    firsts = {}
+
+    def query(name):
+        fn = qs[name]
+        kw = {"index": ivf_index} if name == "knn_ivf" else {}
+        return lambda: fn(spark, sf_dir, **kw)
+
+    timings, firsts, mins = {}, {}, {}
     for name in HEADLINE:
-        fn = qs.get(name)
-        if fn is None:
+        if name not in qs:
             continue
-        samples = []
-        # rep 0 is an untimed warm-up: it carries the per-query one-time
-        # costs (Janino compile of that query's unique generated stages,
-        # persist materialization, first touch of its tables) that
-        # otherwise land in the median on slow/contended hosts — the
-        # documented metric is steady-state execution (measured: first
-        # runs are 2.5-6x steady state for the cache-heavy dedup
-        # queries). Its wall time IS recorded, as ``first_sec`` in the
-        # output JSON, so the cold (cache-less) cost of persist-heavy
-        # queries stays visible next to the steady-state median; floors
-        # and the regression gate key on the median only.
-        for rep in range(reps + 1):
-            t0 = time.time()
-            if name == "knn_ivf":
-                df = fn(spark, sf_dir, index=ivf_index)
-            else:
-                df = fn(spark, sf_dir)
-            # noop sink: full materialization of every column, immune to
-            # the projection pruning count() allows
-            df.write.format("noop").mode("overwrite").save()
-            if rep > 0:
-                samples.append(time.time() - t0)
-            else:
-                firsts[name] = round(time.time() - t0, 3)
-                if df.isEmpty():
-                    print(f"warning: {name} returned 0 rows",
-                          file=sys.stderr)
-        timings[name] = round(statistics.median(samples), 3)
-        # drop caches a query persisted by design (lm_score gram tables,
-        # ngram rankings) so they can't poison LATER queries' timings via
-        # memory pressure — the r6 sweep measured 0.8 s → 18 s on
-        # text_fingerprint purely by session position; each query's own
-        # reps still benefit from its warm-up rep because rep 0 re-warms
-        # within the query
-        spark.catalog.clearCache()
+        r = measure.run(query(name), reps)
+        timings[name] = round(r["median"], 3)
+        firsts[name] = round(r["first"], 3)
+        mins[name] = round(r["min"], 3)
+        df = r["df"]
+        if df.isEmpty():
+            print(f"warning: {name} returned 0 rows", file=sys.stderr)
 
         if name == "feldman_e2_export":
             # plan-posture pin for the E2 flagship (export.py:102-150):
@@ -431,33 +397,15 @@ def main() -> None:
                       f"host_ratio {host_ratio:.2f})", file=sys.stderr)
         # Self-defending retry: a flag on this hypervisor is usually a
         # bursty steal-time artifact (identical code measured 2-6x apart
-        # minutes apart). Re-MEASURE each flagged query in-session with
-        # the SAME protocol as the main pass (one untimed warm-up rep +
-        # median of `reps`), and record both numbers in the artifact — a
+        # minutes apart). Re-measure each flagged query in-session with
+        # the main pass's ``measure.run`` and record both numbers — a
         # genuine plan regression reproduces on retry; a burst doesn't.
-        # The protocol must match because for queries that persist
-        # intermediate tables (ngram Jaccard's gram/ranked caches) the
-        # timed reps legitimately reuse the warm-up's cache via Spark's
-        # canonical-plan CacheManager lookup — a single COLD rerun pays
-        # ~2x the floor-setting cost by construction and can never clear
-        # (measured: ngram 3.8-4.2 s cold vs 2.3-2.6 s steady-state on
-        # one host; the r9 uncleared flag was exactly this asymmetry).
+        # Not a single cold rerun: queries that persist intermediates
+        # (ngram Jaccard) reuse the warm-up's cache in their timed reps,
+        # so a cold rerun pays ~2x the floor by construction (measured:
+        # 3.8-4.2 s cold vs 2.3-2.6 s; the r9 uncleared flag).
         for name in list(regressions):
-            fn = qs.get(name)
-            if fn is None:
-                continue
-            rsamples = []
-            for rep in range(reps + 1):
-                t0 = time.time()
-                if name == "knn_ivf":
-                    df = fn(spark, sf_dir, index=ivf_index)
-                else:
-                    df = fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                if rep > 0:
-                    rsamples.append(time.time() - t0)
-            t2 = round(statistics.median(rsamples), 3)
-            spark.catalog.clearCache()
+            t2 = round(measure.run(query(name), reps)["median"], 3)
             fl = floors[name]
             cleared = t2 <= _limit(fl, host_ratio)
             retried[name] = {"first": regressions[name]["now"],
@@ -482,6 +430,7 @@ def main() -> None:
         "queries": timings,
         "sf": sf_val,
         "first_sec": firsts,
+        "min_sec": mins,
         "setup": setup,
         "calibration_sec": calibration,
         "host_ratio": round(host_ratio, 3),

@@ -10,17 +10,18 @@ Usage:
         spark.sql.adaptive.coalescePartitions.initialPartitionNum 256 [reps]
 
 The base arm UNSETS the conf (session default); the variant arm sets it
-to the given value. Prints per-query medians and the full sample lists.
+to the given value. Both arms must return the same row set. Prints
+per-query medians, the full sample lists and the shared checksum.
 """
 
 from __future__ import annotations
 
 import os
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools import measure  # noqa: E402
 
 
 def main() -> None:
@@ -31,40 +32,30 @@ def main() -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     import __spark_entry__ as entry
-    from feldman_spark.session import get_spark
 
-    spark = get_spark(app_name="feldman-spark-ab-conf",
-                      master=f"local[{cpus}]", shuffle_partitions=int(cpus))
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-    spark.range(int(cpus)).repartition(int(cpus)).mapInPandas(
-        lambda it: it, "id long").count()
-
+    spark = measure.session("feldman-spark-ab-conf", sf_dir, cpus)
     qs = entry.queries()
+
+    def arm(fn, conf_value):
+        def call():
+            if conf_value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, conf_value)
+            return fn(spark, sf_dir)
+        return call
+
     for name in names:
         fn = qs[name]
-        arms: dict[str, list[float]] = {"base": [], "variant": []}
-        # one untimed warm-up per arm (codegen compile, file listing)
-        for arm in ("base", "variant"):
-            if arm == "variant":
-                spark.conf.set(key, value)
-            else:
-                spark.conf.unset(key)
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        for _ in range(reps):
-            for arm in ("base", "variant"):
-                if arm == "variant":
-                    spark.conf.set(key, value)
-                else:
-                    spark.conf.unset(key)
-                t0 = time.time()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                arms[arm].append(time.time() - t0)
+        r = measure.ab({"base": arm(fn, None), "variant": arm(fn, value)},
+                       reps)
         spark.conf.unset(key)
-        b, v = statistics.median(arms["base"]), statistics.median(arms["variant"])
+        base, var = r["base"], r["variant"]
+        b, v = base["median"], var["median"]
         print(f"{name}: base median {b:.3f}s  variant median {v:.3f}s  "
-              f"({v / b:.2f}x)  base={[round(s, 2) for s in arms['base']]} "
-              f"variant={[round(s, 2) for s in arms['variant']]}",
+              f"({v / b:.2f}x)  base={[round(s, 2) for s in base['samples']]} "
+              f"variant={[round(s, 2) for s in var['samples']]} "
+              f"checksum={base['checksum']}",
               flush=True)
 
 

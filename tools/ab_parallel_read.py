@@ -10,11 +10,11 @@ Prints per-query medians and the verdict. Usage:
 from __future__ import annotations
 
 import os
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools import measure  # noqa: E402
 
 
 def main() -> None:
@@ -24,15 +24,8 @@ def main() -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     import __spark_entry__ as entry
-    from feldman_spark.session import get_spark
 
-    spark = get_spark(app_name="ab-parallel-read",
-                      master=f"local[{cpus}]", shuffle_partitions=int(cpus))
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-    spark.range(int(cpus)).repartition(int(cpus)).mapInPandas(
-        lambda it: it, "id long").count()
-
+    spark = measure.session("ab-parallel-read", sf_dir, cpus)
     orig_t = entry._t
     qs = entry.queries()
 
@@ -43,28 +36,20 @@ def main() -> None:
             return df.repartition(cores)
         return df
 
-    def run(name, use_tw):
-        entry._t = tw_t if use_tw else orig_t
-        try:
-            t0 = time.time()
-            qs[name](spark, sf_dir).write.format(
-                "noop").mode("overwrite").save()
-            return time.time() - t0
-        finally:
-            entry._t = orig_t
+    def arm(name, read):
+        def call():
+            entry._t = read
+            try:
+                return qs[name](spark, sf_dir)
+            finally:
+                entry._t = orig_t
+        return call
 
     for name in names:
-        # warm both arms (codegen compile for each plan shape)
-        run(name, False)
-        run(name, True)
-        spark.catalog.clearCache()
-        base, tw = [], []
-        for _ in range(reps):
-            base.append(run(name, False))
-            spark.catalog.clearCache()
-            tw.append(run(name, True))
-            spark.catalog.clearCache()
-        mb, mt = statistics.median(base), statistics.median(tw)
+        r = measure.ab({"base": arm(name, orig_t), "tw": arm(name, tw_t)},
+                       reps)
+        base, tw = r["base"]["samples"], r["tw"]["samples"]
+        mb, mt = r["base"]["median"], r["tw"]["median"]
         verdict = "TW_WINS" if mt < 0.9 * mb else (
             "BASE_WINS" if mb < 0.9 * mt else "WASH")
         print(f"{name}: base {mb:.3f}s tw {mt:.3f}s -> {verdict}  "

@@ -13,7 +13,8 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 COMMENTARY = {
     "e2_splice_export": (
@@ -172,11 +173,11 @@ def main() -> None:
     from feldman_spark.io.parquet import write_measurement_parquet
 
     depth = "Sediment Depth, unscaled (MBS / CSF-A)"
-    golden = "/root/repo/.tmp/golden"
+    golden = os.path.join(REPO, ".tmp", "golden")
     if os.path.exists(f"{golden}/our_affine.csv"):
         md = load_measurement(
             spark, "/root/reference/testdata/GLAD9_Site1_XRF.csv", depth)
-        p = "/root/repo/.tmp/plans_md.parquet"
+        p = os.path.join(REPO, ".tmp", "plans_md.parquet")
         write_measurement_parquet(md, p)
         res = export_measurement_frames(
             spark.read.parquet(p),
@@ -208,7 +209,7 @@ def main() -> None:
     _books = pq_train(emb, m=8, k=16, iters=2, sample=200)
     # the search-time plan runs over the MATERIALIZED codes index (the
     # one-time encode pass is a separate job), so capture scan -> ADC
-    _idx = "/root/repo/.tmp/plans_pq_codes.parquet"
+    _idx = os.path.join(REPO, ".tmp", "plans_pq_codes.parquet")
     pq_encode(emb, _books).write.mode("overwrite").parquet(_idx)
     plans["pq_adc_topk"] = pq_topk(
         spark.read.parquet(_idx), _books, _q, k=10)
@@ -255,8 +256,7 @@ def main() -> None:
         out.append("```")
         out.append("")
 
-    os.makedirs("/root/repo/docs", exist_ok=True)
-    with open("/root/repo/docs/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "docs", "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote docs/PLANS.md", file=sys.stderr)
 

@@ -20,10 +20,11 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 REF = "/root/reference"
-OUT = "/root/repo/.tmp/headtohead"
+OUT = os.path.join(REPO, ".tmp", "headtohead")
 
 _REF_SCRIPT = """
 import sys, logging, time

@@ -36,9 +36,9 @@ artifact:
 region/nation are fixed-size dimensions in TPC-H and are copied as-is.
 
 Usage:
-    python tools/make_sf.py --target 1 [--out /root/repo/.tmp/sf1]
+    python tools/make_sf.py --target 1 [--out .tmp/sf1]
 then:
-    SPARK_GRAFT_SF_DIR=/root/repo/.tmp/sf1 python bench.py
+    SPARK_GRAFT_SF_DIR=.tmp/sf1 python bench.py
 """
 
 from __future__ import annotations
@@ -50,7 +50,8 @@ import string
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
@@ -190,7 +191,7 @@ def main() -> None:
 
     k = round(args.target / SRC_SF)
     assert k >= 1, "target must be >= source sf"
-    out_dir = args.out or f"/root/repo/.tmp/sf{args.target:g}"
+    out_dir = args.out or os.path.join(REPO, ".tmp", f"sf{args.target:g}")
     os.makedirs(out_dir, exist_ok=True)
 
     from feldman_spark.session import get_spark

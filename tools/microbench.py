@@ -1,19 +1,21 @@
 #!/usr/bin/env python3
-"""Ad-hoc per-query microbench: median-of-N wall clock to the noop sink
-for a comma-separated list of registered queries, same harness shape as
-bench.py (warm-up, noop materialization). Usage:
+"""Ad-hoc per-query microbench: bench.py's protocol (one untimed warm-up,
+median of the timed reps to the noop sink, cache cleared after each
+query) for a comma-separated list of registered queries, so a bench flag
+can be reproduced in isolation. Usage:
 
     python tools/microbench.py q1_pricing_summary,dedup_minhash_lsh [reps]
 """
 
 from __future__ import annotations
 
+import functools
 import os
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools import measure  # noqa: E402
 
 
 def main() -> None:
@@ -23,32 +25,13 @@ def main() -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     import __spark_entry__ as entry
-    from feldman_spark.session import get_spark
 
-    spark = get_spark(app_name="feldman-spark-microbench",
-                      master=f"local[{cpus}]", shuffle_partitions=int(cpus))
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-    spark.range(int(cpus)).repartition(int(cpus)).mapInPandas(
-        lambda it: it, "id long").count()
-
+    spark = measure.session("feldman-spark-microbench", sf_dir, cpus)
     qs = entry.queries()
     for name in names:
-        # same hygiene as bench.py: drop every cached frame the previous
-        # query registered, so a multi-query invocation can't accumulate
-        # session-lifetime persists (measured: an sf20 7-query sequence
-        # OOMed the 8g driver without this; bench.py has cleared per
-        # query since round 7)
-        spark.catalog.clearCache()
-        fn = qs[name]
-        samples = []
-        for _ in range(reps):
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.time() - t0)
-        med = statistics.median(samples)
-        print(f"{name}: median {med:.3f}s  samples "
-              f"{[round(s, 3) for s in samples]}")
+        r = measure.run(functools.partial(qs[name], spark, sf_dir), reps)
+        print(f"{name}: median {r['median']:.3f}s  samples "
+              f"{[round(s, 3) for s in r['samples']]}")
 
 
 if __name__ == "__main__":

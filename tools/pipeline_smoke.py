@@ -25,7 +25,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -163,7 +164,7 @@ def main() -> None:
     from feldman_spark.pipeline.training import export_jsonl_sharded
     slice_df = corpus.filter(F.col("doc_id") < 100_000)
     man = export_jsonl_sharded(
-        slice_df, "/root/repo/.tmp/pipeline_smoke_jsonl", "doc_id",
+        slice_df, os.path.join(REPO, ".tmp", "pipeline_smoke_jsonl"), "doc_id",
         num_shards=int(args.cpus), max_records_per_file=20_000)
     man_rows = {r["shard"]: r["n_rows"] for r in man.collect()}
     timings["epoch_shuffle_export"] = round(time.time() - t0, 1)

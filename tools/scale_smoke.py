@@ -19,7 +19,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -61,7 +62,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--rows", type=int, default=10_000_000)
     ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    ap.add_argument("--workdir", default="/root/repo/.tmp/scale")
+    ap.add_argument("--workdir", default=os.path.join(REPO, ".tmp", "scale"))
     args = ap.parse_args()
 
     from feldman_spark.session import get_spark

@@ -7,7 +7,7 @@ queries whose plans stop scaling — the r5 sweep caught 380 s / 115 s /
 42 s outliers the headline bench never ran.
 
 Usage:
-    python tools/sweep.py --sf-dir /root/repo/.tmp/sf5 --out SWEEP_sf5.json
+    python tools/sweep.py --sf-dir .tmp/sf5 --out SWEEP_sf5.json
     python tools/sweep.py --compare SWEEP_sf1.json SWEEP_sf5.json --factor 5
 
 ``--compare A B`` prints per-query ratios B/A and flags ratios above
@@ -28,54 +28,36 @@ the data-proportional work, so cold ratios attribute noise, not plans.
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import os
 import sys
-import time
 import traceback
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from tools import measure  # noqa: E402
 
 
 def run_sweep(sf_dir: str, cpus: str, out_path: str, reps: int) -> int:
-    import statistics
-
     import __spark_entry__ as entry
-    from feldman_spark.session import get_spark
 
-    spark = get_spark(app_name="feldman-spark-sweep",
-                      master=f"local[{cpus}]", shuffle_partitions=int(cpus),
-                      extra_conf={"spark.ui.showConsoleProgress": "false"})
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-    spark.range(int(cpus)).repartition(int(cpus)).mapInPandas(
-        lambda it: it, "id long").count()
-
+    spark = measure.session("feldman-spark-sweep", sf_dir, cpus)
     times, errors = {}, {}
     qs = entry.queries()
     for i, (name, fn) in enumerate(qs.items()):
         try:
-            samples = []
-            for rep in range(reps):
-                t0 = time.time()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                samples.append(round(time.time() - t0, 3))
-            # reps=1: the single (cold) run; reps>1: median of reps 2..N
-            t = samples[0] if reps == 1 else round(
-                statistics.median(samples[1:]), 3)
+            r = measure.run(functools.partial(fn, spark, sf_dir), reps - 1)
+            t = round(r["median"] if reps > 1 else r["first"], 3)
             times[name] = t
             print(f"[{i+1}/{len(qs)}] {name}: {t}s", file=sys.stderr)
         except Exception as e:  # record, keep sweeping
             errors[name] = f"{type(e).__name__}: {e}"
             print(f"[{i+1}/{len(qs)}] {name}: ERROR {e}", file=sys.stderr)
             traceback.print_exc(limit=3)
-        finally:
-            # several operators persist reduced intermediates by design
-            # (lm_score gram tables, ngram rankings); across a 144-query
-            # sequential session those caches accumulate and the memory
-            # pressure poisons LATER queries' timings (measured 0.8 s →
-            # 18 s on text_fingerprint purely by sweep position). Each
-            # query is measured against a clean cache instead.
+            # a query that failed before returning a frame may still have
+            # persisted intermediates; later queries start clean
             spark.catalog.clearCache()
     out = {
         "sf_dir": sf_dir, "cpus": int(cpus), "reps": reps,
@@ -110,7 +92,7 @@ def compare(a_path: str, b_path: str, factor: float, slack: float) -> int:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf-dir", default="/root/repo/.tmp/sf5")
+    ap.add_argument("--sf-dir", default=os.path.join(REPO, ".tmp", "sf5"))
     ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
     ap.add_argument("--out", default=None)
     ap.add_argument("--reps", type=int, default=2)
