@@ -28,7 +28,7 @@ from .ops.filters import invalid_section_sql
 from .ops.sizing import persist_scoped
 from .splice import (
     IDX,
-    core_top_lookup,
+    core_tops,
     fill_affine,
     off_splice_affines,
     on_splice_affines,
@@ -120,7 +120,6 @@ def convert_sparse_splice_frames(
     splice_start_depth: Optional[float] = None,
     manual_correlation: Optional[DataFrame] = None,
     manual_offsets: Optional[DataFrame] = None,
-    validate: bool = True,
 ) -> Tuple[DataFrame, DataFrame]:
     """E1 as a pure DataFrame pipeline: returns ``(affine, sit)``.
 
@@ -129,8 +128,7 @@ def convert_sparse_splice_frames(
     matching the reference, which reloads its own rounded CSV output
     (``feldman.py:117``) without the reload.
     """
-    if validate:
-        _validate_sections(secsumm, sparse)
+    _validate_sections(secsumm, sparse)
 
     lookup = section_lookup(secsumm)
     enriched = with_offset_depths(sparse, lookup)
@@ -149,18 +147,18 @@ def convert_sparse_splice_frames(
         for c in ("TopDepthCSF", "TopDepthCCSF", "BottomDepthCSF", "BottomDepthCCSF")
     })
 
-    on_aff = on_splice_affines(scanned, core_top_lookup(secsumm))
+    cores = core_tops(secsumm)
+    on_aff = on_splice_affines(scanned, cores)
     off_aff = off_splice_affines(
-        sit_rounded, secsumm,
+        sit_rounded, cores, lookup,
         manual_correlation=manual_correlation,
         manual_offsets=manual_offsets,
     )
     # affine is tiny by contract (one row per core) but its lineage — the
-    # off-splice crossJoin/window chain — is ~30 stages; cache it so every
-    # downstream action (counts, broadcast into E2, CSV write) runs the
-    # chain once instead of per-action
-    affine = persist_scoped(
-        fill_affine(on_aff.drop(IDX).unionByName(off_aff.drop(IDX))))
+    # off-splice crossJoin/aggregate chain — is many stages; cache it so
+    # every downstream action (counts, broadcast into E2, CSV write) runs
+    # the chain once instead of per-action
+    affine = persist_scoped(fill_affine(on_aff.union(off_aff)))
     return affine, sit.drop(IDX)
 
 

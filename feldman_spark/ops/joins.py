@@ -10,7 +10,7 @@ shuffles.
 
 from __future__ import annotations
 
-from typing import List, Optional, Sequence
+from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -22,7 +22,6 @@ __all__ = [
     "containment_join",
     "binned_range_join",
     "interval_overlap_join",
-    "nearest_join",
     "nearest_value_join",
     "asof_join",
     "bloom_might_contain",
@@ -253,69 +252,6 @@ def interval_overlap_join(
             & (F.col("_bin") == start_bin)
         )
         .drop("_bin", "_rbin")
-    )
-
-
-def nearest_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_value: str,
-    right_value: str,
-    left_keys: Sequence[str],
-    partition_on: Sequence[str] = (),
-    tie_break: Optional[Sequence[str]] = None,
-    exclude_self_on: Optional[Sequence[str]] = None,
-    suffix: str = "_near",
-) -> DataFrame:
-    """J7: nearest-key (as-of-style) join — for each left row, the right row
-    minimizing ``abs(left_value - right_value)``
-    (``coring/sectionSummary.py:88-100`` ``getCoreWithClosestTop``).
-
-    Implemented as a (broadcast) join on ``partition_on`` (cross join when
-    empty) followed by a ``row_number`` window over (|Δ|, tie_break...).
-    The right side is assumed small enough to broadcast — true for every
-    reference use (on-splice core lists ≤ hundreds of rows).
-
-    ``exclude_self_on``: columns that must NOT all be equal between left and
-    right (the reference skips the search core itself,
-    ``coring/sectionSummary.py:93-94``).
-
-    NOTE: this general form materializes left × right within each
-    partition key — fine for the reference's tiny splice-side tables, but
-    quadratic. For plain nearest-*value* matching against a broadcastable
-    right side, use :func:`nearest_value_join` (vectorized binary search,
-    O(N log M), no cross join) — the 100 TB-scale path.
-    """
-    rcols = right.columns
-    renamed = right
-    for c in rcols:
-        renamed = renamed.withColumnRenamed(c, c + suffix)
-
-    if partition_on:
-        cond = None
-        for k in partition_on:
-            clause = F.col(f"`{k}`") == F.col(f"`{k}{suffix}`")
-            cond = clause if cond is None else cond & clause
-        joined = left.join(F.broadcast(renamed), on=cond, how="inner")
-    else:
-        joined = left.crossJoin(F.broadcast(renamed))
-
-    if exclude_self_on:
-        same: Optional[Column] = None
-        for k in exclude_self_on:
-            clause = F.col(f"`{k}`") == F.col(f"`{k}{suffix}`")
-            same = clause if same is None else same & clause
-        joined = joined.filter(~same)
-
-    diff = F.abs(F.col(f"`{left_value}`") - F.col(f"`{right_value}{suffix}`"))
-    order: List[Column] = [diff]
-    for t in tie_break or []:
-        order.append(F.col(f"`{t}{suffix}`"))
-    w = Window.partitionBy(*[F.col(f"`{k}`") for k in left_keys]).orderBy(*order)
-    return (
-        joined.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
     )
 
 

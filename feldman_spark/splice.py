@@ -16,9 +16,14 @@ Pipeline (re-expressing ``feldman.py:96-142,155-291,404-529``):
    hundreds of rows, ``BASELINE.md``), so the scan runs in a single
    ``applyInPandas`` group; everything expensive stays distributed.
 
-3. :func:`off_splice_affines` — off-splice cores get shifts via the
-   manual-correlation join (J6) or the nearest-top join (J7), replacing the
-   reference's per-core linear search (``coring/sectionSummary.py:88-100``).
+3. :func:`on_splice_affines` / :func:`off_splice_affines` — one affine
+   row per core, both anchored at :func:`core_tops` and ending in one
+   shared projection. On-splice cores take the scan's offset; off-splice
+   cores (those absent from the SIT) take a manual-correlation TIE (J6), a
+   manual SET offset, or the SIT offset of the on-splice core with the
+   nearest top (J7: a broadcast cross join reduced by ``min_by`` per core),
+   replacing the reference's per-core linear search
+   (``coring/sectionSummary.py:88-100``).
 
 4. :func:`fill_affine` — differential offset (lag, W2) and expanding
    regression slope (``regr_slope``, W3/A6) per hole.
@@ -31,19 +36,20 @@ from typing import List, Optional, Sequence
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType, DoubleType, LongType, StringType, StructField, StructType,
 )
 
 from .ops.gaps import gap_above, parse_gaps
-from .ops.joins import broadcast_equi_join, nearest_join
-from .ops.windows import expanding_slope, lag_diff
+from .ops.joins import broadcast_equi_join
+from .ops.windows import expanding_slope, first_seen, lag_diff
 
 __all__ = [
     "IDX",
     "section_lookup",
+    "core_tops",
     "with_offset_depths",
     "splice_scan",
     "sit_from_scan",
@@ -54,6 +60,7 @@ __all__ = [
 ]
 
 IDX = "_idx"  # stable input-order column carried by loaders
+KEYS = ["Site", "Hole", "Core"]  # a core's identity
 
 AFFINE_OUT_COLUMNS = [
     "Site", "Hole", "Core", "Tool", "DepthCSF", "DepthCCSF", "Offset",
@@ -303,55 +310,59 @@ def sit_from_scan(scanned: DataFrame, sparse_columns: Sequence[str]) -> DataFram
     return scanned.orderBy(IDX).select([F.col(f"`{c}`") for c in out])
 
 
-def on_splice_affines(scanned: DataFrame, core_tops: DataFrame) -> DataFrame:
-    """One affine row per first-seen core in splice order
-    (``feldman.py:236-248``), depths anchored at the core's top —
-    ``getCoreTop`` = section '1' top (``coring/sectionSummary.py:102-103``)
-    supplied via broadcast join against ``core_tops``."""
-    rows = scanned.filter(F.col("_newCore"))
-    rows = broadcast_equi_join(rows, core_tops, on=["Site", "Hole", "Core"], how="left")
-    return rows.select(
-        "Site", "Hole", "Core", "Tool",
-        F.col("CoreTop").alias("DepthCSF"),
-        (F.col("CoreTop") + F.col("_affine")).alias("DepthCCSF"),
-        F.col("_affine").alias("Offset"),
-        F.col("_shiftType").alias("ShiftType"),
-        F.col("_fixedCore").alias("FixedCore"),
-        F.col("_fixedTieCsf").alias("FixedTieCSF"),
-        F.col("_shiftedTieCsf").alias("ShiftedTieCSF"),
-        F.lit("").alias("DataUsed"),
-        F.lit("splice").alias("Comment"),
-        F.col(IDX).alias(IDX),
-    )
-
-
-def core_top_lookup(secsumm: DataFrame) -> DataFrame:
-    """(Site,Hole,Core) → rounded top depth of section '1'
+def core_tops(secsumm: DataFrame) -> DataFrame:
+    """One row per core: its section-'1' row with the raw ``TopDepth`` and
+    ``CoreTop`` = that top rounded to 3 places, ``getCoreTop``
     (``coring/sectionSummary.py:102-107``)."""
-    return (
-        secsumm.filter(F.col("Section") == "1")
-        .select("Site", "Hole", "Core", F.bround("TopDepth", 3).alias("CoreTop"))
-    )
+    return secsumm.filter(F.col("Section") == "1").select(
+        *KEYS, "Tool", "TopDepth", F.bround("TopDepth", 3).alias("CoreTop"), IDX)
+
+
+def _affine_rows(rows: DataFrame, comment: str, **shift: str) -> DataFrame:
+    """The affine projection both branches end in: depths anchored at
+    ``CoreTop``, and the five shift columns (``Offset``, ``ShiftType``,
+    ``FixedCore``, ``FixedTieCSF``, ``ShiftedTieCSF``) given as SQL."""
+    return rows.selectExpr(*KEYS, "Tool", "CoreTop",
+                           *[f"{sql} AS {name}" for name, sql in shift.items()]) \
+        .selectExpr(*KEYS, "Tool", "CoreTop AS DepthCSF", "CoreTop + Offset AS DepthCCSF",
+                    "Offset", "ShiftType", "FixedCore", "FixedTieCSF", "ShiftedTieCSF",
+                    "'' AS DataUsed", f"'{comment}' AS Comment")
+
+
+def on_splice_affines(scanned: DataFrame, cores: DataFrame) -> DataFrame:
+    """One affine row per first-seen core in splice order
+    (``feldman.py:236-248``), its depth anchored at the core top."""
+    rows = broadcast_equi_join(scanned.filter(F.col("_newCore")),
+                               cores.select(*KEYS, "CoreTop"), on=KEYS, how="left")
+    return _affine_rows(rows, "splice", Offset="_affine", ShiftType="_shiftType",
+                        FixedCore="_fixedCore", FixedTieCSF="_fixedTieCsf",
+                        ShiftedTieCSF="_shiftedTieCsf")
 
 
 def sit_core_offsets(sit: DataFrame) -> DataFrame:
     """(Site,Hole,Core) → first SIT row's ``TopDepthCCSF − TopDepthCSF``
     (``coring/spliceInterval.py:73-77`` ``getCoreOffset`` takes the first
     matching row). The SIT must carry ``_idx`` (file/splice order)."""
-    w = Window.partitionBy("Site", "Hole", "Core").orderBy(IDX)
-    return (
-        sit.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(
-            "Site", "Hole", "Core",
-            (F.col("TopDepthCCSF") - F.col("TopDepthCSF")).alias("SitOffset"),
-        )
-    )
+    return first_seen(sit, KEYS, [F.col(IDX)]) \
+        .selectExpr(*KEYS, "TopDepthCCSF - TopDepthCSF AS SitOffset")
+
+
+def _with_point_depth(ties: DataFrame, lookup: DataFrame, n: int) -> DataFrame:
+    """Attach ``Mbsf<n>``: the unscaled ``getOffsetDepth`` of correlation
+    point ``n`` (``feldman.py:452-474``)."""
+    look = lookup.selectExpr(*[f"{k} AS {k}{n}" for k in KEYS + ["Section"]],
+                             "SecTop", "GapsParsed")
+    joined = broadcast_equi_join(
+        ties, look, on=[f"{k}{n}" for k in KEYS + ["Section"]], how="left")
+    return joined.withColumn(
+        f"Mbsf{n}", _offset_depth(F.col(f"SectionDepth{n}"), scaled=False),
+    ).drop("SecTop", "GapsParsed")
 
 
 def off_splice_affines(
     sit: DataFrame,
-    secsumm: DataFrame,
+    cores: DataFrame,
+    lookup: DataFrame,
     manual_correlation: Optional[DataFrame] = None,
     manual_offsets: Optional[DataFrame] = None,
 ) -> DataFrame:
@@ -364,123 +375,53 @@ def off_splice_affines(
     3. default: the SIT offset of the on-splice core with the nearest
        section-'1' top depth (J7; first-in-file order wins ties, matching
        the reference's strict ``<`` scan, ``coring/sectionSummary.py:92-98``).
+       A core without a top never wins: the reference's ``<`` is false
+       against NaN.
     """
-    cores = secsumm.filter(F.col("Section") == "1").select(
-        "Site", "Hole", "Core", "Tool", "TopDepth", F.col(IDX))
-    sit_keys = sit.select("Site", "Hole", "Core").distinct()
-    on_cores = cores.join(F.broadcast(sit_keys), ["Site", "Hole", "Core"], "left_semi")
-    off_cores = cores.join(F.broadcast(sit_keys), ["Site", "Hole", "Core"], "left_anti")
-
     offsets = sit_core_offsets(sit)
-    lookup = section_lookup(secsumm)
+    off_cores = broadcast_equi_join(cores, offsets, on=KEYS, how="left_anti")
 
-    # --- default method: nearest on-splice core top (J7 + A4) ------------
-    on_with_offsets = broadcast_equi_join(
-        on_cores.select("Site", "Hole", "Core", "TopDepth", IDX),
-        offsets, on=["Site", "Hole", "Core"], how="left")
-    # search key: the off-splice core's *rounded* section-'1' top
-    # (getSectionTop rounds, candidate TopDepth is raw — feldman parity)
-    off_search = off_cores.withColumn("SearchTop", F.bround("TopDepth", 3))
-    nearest = nearest_join(
-        off_search,
-        on_with_offsets.select("Site", "Hole", "Core", "TopDepth", "SitOffset", IDX),
-        left_value="SearchTop",
-        right_value="TopDepth",
-        left_keys=["Site", "Hole", "Core"],
-        partition_on=(),  # reference searches across ALL on-splice cores
-        tie_break=[IDX],
-        exclude_self_on=["Site", "Hole", "Core"],
-    )
-    default_offsets = nearest.select(
-        "Site", "Hole", "Core", "Tool", "TopDepth", IDX,
-        F.col("SitOffset_near").alias("DefaultOffset"),
-    )
-
-    result = default_offsets.withColumns({
-        "Offset": F.col("DefaultOffset"),
-        "ShiftType": F.lit("REL"),
-        "FixedCore": F.lit(""),
-        "FixedTieCSF": F.lit(None).cast("double"),
-        "ShiftedTieCSF": F.lit(None).cast("double"),
-    })
+    # --- default method: nearest on-splice core top (J7 + A4). The search
+    # key is the off-splice core's *rounded* top, the candidate's is raw
+    # (getSectionTop rounds, the candidate TopDepth does not: feldman parity)
+    candidates = broadcast_equi_join(
+        cores.filter(F.col("TopDepth").isNotNull()), offsets, on=KEYS, how="inner",
+    ).selectExpr("TopDepth AS NearTop", "SitOffset", f"{IDX} AS NearIdx")
+    rows = off_cores.crossJoin(F.broadcast(candidates)) \
+        .groupBy(*KEYS, "Tool", "CoreTop") \
+        .agg(F.expr("min_by(SitOffset, struct(abs(CoreTop - NearTop), NearIdx))")
+             .alias("Offset"))
+    shift = {"Offset": "Offset", "ShiftType": "'REL'", "FixedCore": "''",
+             "FixedTieCSF": "CAST(NULL AS DOUBLE)", "ShiftedTieCSF": "CAST(NULL AS DOUBLE)"}
 
     # --- manual SET offsets (ManualOffsetTable, feldman.py:478-481) ------
     if manual_offsets is not None:
-        mo = manual_offsets.select(
-            "Site", "Hole", "Core", F.col("Offset").alias("ManualOffset"))
-        result = broadcast_equi_join(result, mo, on=["Site", "Hole", "Core"], how="left")
-        result = result.withColumns({
-            "ShiftType": F.when(F.col("ManualOffset").isNotNull(), F.lit("SET"))
-                          .otherwise(F.col("ShiftType")),
-            "Offset": F.coalesce("ManualOffset", "Offset"),
-        }).drop("ManualOffset")
+        rows = broadcast_equi_join(
+            rows, manual_offsets.selectExpr(*KEYS, "Offset AS SetOffset"), on=KEYS, how="left")
+        shift["ShiftType"] = "CASE WHEN SetOffset IS NOT NULL THEN 'SET' ELSE 'REL' END"
+        shift["Offset"] = "coalesce(SetOffset, Offset)"
 
     # --- manual correlation TIEs (ManualCorrelationTable, feldman.py:452-474)
     if manual_correlation is not None:
-        mc = manual_correlation
-        # getOffsetDepth for both correlation points (unscaled)
-        look1 = lookup.select(
-            F.col("Site").alias("Site1"), F.col("Hole").alias("Hole1"),
-            F.col("Core").alias("Core1"), F.col("Section").alias("Section1"),
-            "SecTop", "GapsParsed")
-        mc = F.broadcast(mc).join(F.broadcast(look1),
-                                  ["Site1", "Hole1", "Core1", "Section1"], "left")
-        mc = mc.withColumn(
-            "OffSpliceMbsf",
-            F.col("SecTop") + F.col("SectionDepth1") / 100.0
-            - gap_above(F.col("GapsParsed"), F.col("SectionDepth1")) / 100.0,
-        ).drop("SecTop", "GapsParsed")
-        look2 = lookup.select(
-            F.col("Site").alias("Site2"), F.col("Hole").alias("Hole2"),
-            F.col("Core").alias("Core2"), F.col("Section").alias("Section2"),
-            "SecTop", "GapsParsed")
-        mc = mc.join(F.broadcast(look2), ["Site2", "Hole2", "Core2", "Section2"], "left")
-        mc = mc.withColumn(
-            "OnSpliceMbsf",
-            F.col("SecTop") + F.col("SectionDepth2") / 100.0
-            - gap_above(F.col("GapsParsed"), F.col("SectionDepth2")) / 100.0,
-        ).drop("SecTop", "GapsParsed")
+        ties = _with_point_depth(_with_point_depth(manual_correlation, lookup, 1), lookup, 2)
         # on-splice core must actually be in the SIT (feldman.py:455,475-477)
-        sit_offsets2 = offsets.select(
-            F.col("Site").alias("Site2"), F.col("Hole").alias("Hole2"),
-            F.col("Core").alias("Core2"), F.col("SitOffset"))
-        mc = mc.join(F.broadcast(sit_offsets2), ["Site2", "Hole2", "Core2"], "inner")
-        ties = mc.select(
-            F.col("Site1").alias("Site"), F.col("Hole1").alias("Hole"),
-            F.col("Core1").alias("Core"),
-            (F.col("OnSpliceMbsf") + F.col("SitOffset") - F.col("OffSpliceMbsf"))
-            .alias("TieOffset"),
-            F.concat(F.col("Hole2"), F.col("Core2")).alias("TieFixedCore"),
-            F.col("OnSpliceMbsf").alias("TieFixedCSF"),
-            F.col("OffSpliceMbsf").alias("TieShiftedCSF"),
-        )
+        ties = broadcast_equi_join(
+            ties, offsets.selectExpr(*[f"{k} AS {k}2" for k in KEYS], "SitOffset"),
+            on=[f"{k}2" for k in KEYS], how="inner",
+        ).selectExpr(*[f"{k}1 AS {k}" for k in KEYS],
+                     "Mbsf2 + SitOffset - Mbsf1 AS TieOffset",
+                     "concat(Hole2, Core2) AS TieFixedCore",
+                     "Mbsf2 AS TieFixedCSF", "Mbsf1 AS TieShiftedCSF")
         # first correlation per core wins; later ones ignored (feldman.py:438-442)
-        ties = ties.groupBy("Site", "Hole", "Core").agg(
-            F.first("TieOffset").alias("TieOffset"),
-            F.first("TieFixedCore").alias("TieFixedCore"),
-            F.first("TieFixedCSF").alias("TieFixedCSF"),
-            F.first("TieShiftedCSF").alias("TieShiftedCSF"),
-        )
-        result = broadcast_equi_join(result, ties, on=["Site", "Hole", "Core"], how="left")
-        has_tie = F.col("TieOffset").isNotNull()
-        result = result.withColumns({
-            "Offset": F.when(has_tie, F.col("TieOffset")).otherwise(F.col("Offset")),
-            "ShiftType": F.when(has_tie, F.lit("TIE")).otherwise(F.col("ShiftType")),
-            "FixedCore": F.when(has_tie, F.col("TieFixedCore")).otherwise(F.col("FixedCore")),
-            "FixedTieCSF": F.when(has_tie, F.col("TieFixedCSF")).otherwise(F.col("FixedTieCSF")),
-            "ShiftedTieCSF": F.when(has_tie, F.col("TieShiftedCSF")).otherwise(F.col("ShiftedTieCSF")),
-        }).drop("TieOffset", "TieFixedCore", "TieFixedCSF", "TieShiftedCSF")
+        ties = ties.groupBy(*KEYS).agg(*[F.first(c).alias(c) for c in (
+            "TieOffset", "TieFixedCore", "TieFixedCSF", "TieShiftedCSF")])
+        rows = broadcast_equi_join(rows, ties, on=KEYS, how="left")
+        tie = {"Offset": "TieOffset", "ShiftType": "'TIE'", "FixedCore": "TieFixedCore",
+               "FixedTieCSF": "TieFixedCSF", "ShiftedTieCSF": "TieShiftedCSF"}
+        shift = {name: f"CASE WHEN TieOffset IS NOT NULL THEN {tie[name]} ELSE {sql} END"
+                 for name, sql in shift.items()}
 
-    core_top = F.bround("TopDepth", 3)
-    return result.select(
-        "Site", "Hole", "Core", "Tool",
-        core_top.alias("DepthCSF"),
-        (core_top + F.col("Offset")).alias("DepthCCSF"),
-        "Offset", "ShiftType", "FixedCore", "FixedTieCSF", "ShiftedTieCSF",
-        F.lit("").alias("DataUsed"),
-        F.lit("off-splice").alias("Comment"),
-        F.col(IDX),
-    )
+    return _affine_rows(rows, "off-splice", **shift)
 
 
 def fill_affine(affine_rows: DataFrame) -> DataFrame:

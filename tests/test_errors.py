@@ -46,7 +46,7 @@ def test_unknown_splice_type_raises(spark):
         ("1", "A", "2", "H", "1", 10.0, "2", 100.0, "TIE", None, "", "", 1),
     ])
     with pytest.raises(Exception, match="unknown splice type"):
-        aff, sit = convert_sparse_splice_frames(_secsumm(spark), sp, validate=False)
+        aff, sit = convert_sparse_splice_frames(_secsumm(spark), sp)
         sit.collect()
 
 
